@@ -49,7 +49,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     def newSession(): SparkSession = measurementSession(cpus, cpus.toInt)
     var spark = newSession()
 
@@ -169,8 +170,9 @@ object Bench {
     // of the sweep, and accumulated cache blocks were the r16 drift —
     // the r17 A/B measured the common-171 subset ALONE at 49.6 s
     // (ext_cores 0.0) vs 58.5-59.2 s inside r16's full-sweep JVM with
-    // unchanged plans. Trained-model memos (merge tables, centroids,
-    // LM/classifier artifacts) survive — only storage blocks go. The
+    // unchanged plans. Driver-side fits (merge tables, centroids,
+    // LM/classifier artifacts, k x k fits) survive — only the session's
+    // frames and storage blocks go. The
     // isolated re-run tail rebuilds cold if it revisits a family; the
     // headline stays min over all passes.
     var lastFamily: String = null
@@ -195,7 +197,6 @@ object Bench {
     val runs = raw.map { case (k, ts) =>
       "\"" + k + "\":" + ts.map(fmt3).mkString("[", ",", "]")
     }.mkString("{", ",", "}")
-    val total = results.map(_._2).filter(_ >= 0).sum
     // Passes differing >3x (and >0.2s absolute) mark shared-host noise:
     // the min is still the headline, but the artifact names the queries
     // whose slow pass should NOT be read as a regression — BENCH_r08's
@@ -234,6 +235,10 @@ object Bench {
     val qsAdj = adjudicated.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val totalAdj = adjudicated.map(_._2).filter(_ >= 0).sum
+    // a failed query has no time: the total covers the others only, so
+    // the line names the failures next to it and a seal refuses them
+    val attempted = adjudicated.size
+    val failed = adjudicated.count(_._2 < 0)
     val loadJson = passLoads.toSeq.sortBy(_._1).map { case (k, ls) =>
       "\"" + k + "\":" + ls.map(fmt3).mkString("[", ",", "]")
     }.mkString("{", ",", "}")
@@ -273,8 +278,15 @@ object Bench {
     val extOk: Option[Boolean] = extCores.map(_ < 1.0)
     val extJson = extCores.map(fmt3).getOrElse("null")
     val okJson = extOk.map(_.toString).getOrElse("null")
-    val json = s"""{"metric":"total","value":$totalAdj,"unit":"sec","passes":2,"agg":"min","ts":"$stamp","load_end":${fmt3(loadavg())},"load_max":${fmt3(loadMax)},"ext_cores":$extJson,"load_ok":$okJson,"noisy":$noisyJson,"isolated":$isoJson,"queries":$qsAdj,"runs":$runs,"load":$loadJson,"sf":"$sfDir"}"""
+    val json = s"""{"metric":"total","value":$totalAdj,"unit":"sec","failed":$failed,"attempted":$attempted,"passes":2,"agg":"min","ts":"$stamp","load_end":${fmt3(loadavg())},"load_max":${fmt3(loadMax)},"ext_cores":$extJson,"load_ok":$okJson,"noisy":$noisyJson,"isolated":$isoJson,"queries":$qsAdj,"runs":$runs,"load":$loadJson,"sf":"$sfDir"}"""
     if (sys.env.get("SPARK_GRAFT_BENCH_REQUIRE_IDLE").contains("1")) {
+      if (failed > 0) {
+        System.err.println(
+          s"[bench] REFUSING to seal: $failed of $attempted queries failed " +
+            "(a failure shrinks the total instead of counting against it)")
+        spark.stop()
+        sys.exit(1)
+      }
       if (extOk.contains(false)) {
         System.err.println(
           s"[bench] REFUSING to seal: neighbor processes averaged " +
@@ -296,7 +308,7 @@ object Bench {
     // second, truly minimal line printed AFTER it always fits — per-query
     // values grow with the query count (167+) and stay in the full line
     // and the artifact file, never here.
-    println(s"""{"metric":"total","value":$totalAdj,"unit":"sec","load_ok":$okJson,"sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":$totalAdj,"unit":"sec","failed":$failed,"attempted":$attempted,"load_ok":$okJson,"sf":"$sfDir"}""")
     // The caller captures a bounded tail of this process's output; the
     // per-query progress trail can push the one parsed JSON line out of
     // that window (it truncated BENCH_r05's total). Persist the line to

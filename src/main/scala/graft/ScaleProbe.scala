@@ -167,7 +167,8 @@ object ScaleProbe {
     val src = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val outBase = sys.env.getOrElse("SPARK_GRAFT_SCALE_OUT", "/tmp/graft_scale")
     val jsonOut = sys.env.getOrElse("SPARK_GRAFT_SCALE_JSON", "BENCH_SCALE.json")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     val factors = sys.env.getOrElse("SPARK_GRAFT_SCALE_FACTORS", "1,10,100")
       .split(",").map(_.trim.toInt).toSeq.sorted
     val queries: Seq[(String, Int)] =

@@ -381,7 +381,7 @@ object Media {
     * fingerprint leave the map task). */
   private def perceptualRel(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    graft.operators.Persists.cached(
+    graft.operators.Artifacts.persist(
       fromDocuments(s, dir)
         .filter(_.kind == "image")
         .mapPartitions(_.map(m =>

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.{cosineWithNorms, dot, hash60, norm2, shingles, tokens}
 import graft.sources.Tables
-import graft.operators.Persists.PersistOps
+import graft.operators.Artifacts.PersistOps
 
 /** SURVEY §2.D — deduplication for training-data pipelines.
   *
@@ -1235,55 +1235,20 @@ object Dedup {
 
   /** Connected-component labels for one pair family of `dir`, memoized
     * per (session, dir, family) and keyed by the source table's CONTENT
-    * fingerprint (the tokenizedDocs/centroid-memo pattern): the CC loop
-    * is a driver-side iteration whose per-round checkpoints are fresh
-    * relations, so CacheManager can never dedup it — without the memo
-    * the cluster listing and the keep-one pass each run the full loop
-    * over identical edges. The label relation is checkpoint-backed and
-    * O(vertices-in-pairs) — nothing corpus-sized is pinned. The loop
-    * runs OUTSIDE the lock (it executes jobs, unlike the lazy
-    * tokenizedDocs build): a lost first-call race recomputes once and
-    * leaks nothing (labels are not persisted entries). Eviction is
-    * insertion-ordered beyond the cap (labels recompute cheaply on the
-    * next call), so a long-lived session over many dirs stays bounded.
+    * fingerprint (the Artifacts store): the CC loop is a driver-side
+    * iteration whose per-round checkpoints are fresh relations, so
+    * CacheManager can never dedup it — without the memo the cluster
+    * listing and the keep-one pass each run the full loop over
+    * identical edges. The label relation is checkpoint-backed and
+    * O(vertices-in-pairs) — nothing corpus-sized is pinned.
     *
-    * FRESHNESS BOUND: a fingerprint change re-runs the loop, but the
-    * edges argument still flows through the family's PERSISTED pair
-    * relation ([[verifiedPairs]] / [[corpusEmbedPairs]]), which — like
-    * [[signatureTable]] — is CacheManager-keyed by plan and never
-    * invalidated in-session. Rewriting a table in place mid-session is
-    * out of contract for the whole dedup family, not just this memo. */
-  // accessOrder=true: get() refreshes an entry, so the eviction scan
-  // below walks least-recently-USED first instead of insertion order.
-  private val ccCache = new java.util.LinkedHashMap[(SparkSession, String, String), (String, DataFrame)](32, 0.75f, true)
+    * The edges argument flows through the family's PERSISTED pair
+    * relation ([[verifiedPairs]] / [[corpusEmbedPairs]]); persisted
+    * store entries follow the file contents of the plans they persist,
+    * so a table rewritten in place rebuilds both. */
   private[graft] def ccLabels(s: SparkSession, dir: String, family: String,
       table: String)(edges: => DataFrame): DataFrame =
-    Tables.fingerprint(s, dir, table) match {
-      case None => connectedComponents(edges) // unverifiable content: no memo
-      case Some(fp) =>
-        val key = (s, dir, family)
-        (ccCache.synchronized {
-          // Evict stopped-session entries first (the bench's restart-on-
-          // death path would otherwise pin dead sessions), then LRU live
-          // ones — but never the key about to be served, which the old
-          // insertion-order scan could purge right before its own lookup.
-          if (ccCache.size > 16) {
-            val dead = ccCache.keySet.iterator
-            while (dead.hasNext) if (dead.next()._1.sparkContext.isStopped) dead.remove()
-          }
-          val lru = ccCache.keySet.iterator
-          while (ccCache.size > 16 && lru.hasNext) {
-            if (lru.next() != key) lru.remove()
-          }
-          Option(ccCache.get(key))
-        }) match {
-          case Some((`fp`, df)) => df
-          case _ =>
-            val df = connectedComponents(edges)
-            ccCache.synchronized { ccCache.put(key, (fp, df)) }
-            df
-        }
-    }
+    Artifacts.scoped(s, dir, table, s"cc:$family")(connectedComponents(edges))
 
   /** Connected components over an undirected edge list (first two
     * columns = endpoint ids): returns (v, lbl) where lbl is the minimum
@@ -1408,7 +1373,7 @@ object Dedup {
     (0 until BloomWords).map(k => expr(s"bit_or(w$k)").as(s"w$k"))
 
   private def bloomFilters(s: SparkSession, dir: String): DataFrame =
-    Persists.cached(bloomContrib(Tables.load(s, dir, "documents"))
+    Artifacts.persist(bloomContrib(Tables.load(s, dir, "documents"))
       .groupBy("source")
       .agg(countDistinct(col("h")).as("n_grams"), bloomWordAggs: _*))
 

@@ -46,27 +46,6 @@ object Joins {
     * bloat codegen — take the sound DataFrame-join fallback. */
   val MaxInlineHot: Int = 64
 
-  /** Operational escape hatch (and A/B profiling seam): `false` makes
-    * [[skewBound]] emit the degenerate single-split columns without
-    * running the detection pass — exactly the naive self-join plan. */
-  @volatile var skewBoundEnabled: Boolean = true
-
-  /** Session-lifetime memo of resolved hot-key sets, keyed by the
-    * salted plan's canonicalized semantic hash + keys + cap (the
-    * trained-model fingerprint posture: sources are static within a
-    * session, so the detection pass runs ONCE per distinct input plan,
-    * not once per query construction — a measured ~0.3 s fixed job
-    * cost at sf0.1 that would otherwise recur on every re-run). */
-  private val hotMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[org.apache.spark.sql.Row]]()
-
-  /** Invalidation hook for the hot-set memo (ADVICE r15): call after
-    * replacing a table's data in place mid-session (the memo key is the
-    * canonicalized PLAN, which doesn't see file contents) or from test
-    * harnesses that re-measure detection cost. Safe anytime — the next
-    * construction simply re-runs the bounded detection pass. */
-  def clearSkewMemo(): Unit = hotMemo.clear()
-
   /** Adaptive salted split for a skewed band/bucket equi-join — the
     * self-join twin of [[saltedJoin]] (which replicates the ENTIRE small
     * side `buckets`×; here replication is per-key ceil(n/cap), i.e. 1
@@ -119,29 +98,18 @@ object Joins {
       "saltedKeys and replicatedKeys must pair up 1:1")
     def degenerate = (salted.withColumn("__split", lit(0)),
       replicated.withColumn("__split_r", lit(0)))
-    if (!skewBoundEnabled) return degenerate
     // Phase 1 (eager, bounded, memoized): exact per-key counts, hot
-    // keys only.
-    val memoKey = salted.queryExecution.logical.canonicalized.semanticHash().toString +
-      "|" + saltedKeys.mkString(",") + "|" + cap
-    // compute OUTSIDE any map lock (a Spark job inside computeIfAbsent
-    // would hold the bin lock for the collect's duration, blocking
-    // concurrent query constructions hashing to the same bin); the
-    // putIfAbsent race at worst runs the bounded pass twice and both
-    // winners see one consistent value
-    val hotRows = {
-      val cached = hotMemo.get(memoKey)
-      if (cached != null) cached
-      else {
-        val computed = salted.groupBy(saltedKeys.map(col): _*)
-          .agg(count(lit(1L)).as("__skb_n"))
-          .filter(col("__skb_n") > cap.toLong)
-          .limit(MaxInlineHot + 1)
-          .collect()
-        if (hotMemo.size > 256) hotMemo.clear() // crude bound, like Tables.cache
-        val prev = hotMemo.putIfAbsent(memoKey, computed)
-        if (prev != null) prev else computed
-      }
+    // keys only. Memoized by the salted plan's identity and file
+    // contents + keys + cap (the Artifacts store): the detection pass
+    // runs ONCE per distinct input, not once per query construction —
+    // a measured ~0.3 s fixed job cost at sf0.1 that would otherwise
+    // recur on every re-run.
+    val hotRows = Artifacts.ofPlan(salted, s"skew:${saltedKeys.mkString(",")}|$cap") {
+      salted.groupBy(saltedKeys.map(col): _*)
+        .agg(count(lit(1L)).as("__skb_n"))
+        .filter(col("__skb_n") > cap.toLong)
+        .limit(MaxInlineHot + 1)
+        .collect()
     }
     if (hotRows.isEmpty) return degenerate
     if (hotRows.length <= MaxInlineHot) {
@@ -162,7 +130,7 @@ object Joins {
           explode(sequence(lit(0), mExpr(replicatedKeys) - 1))))
     } else {
       // Phase 2b: skew too broad to inline — count-relation joins.
-      val saltedP = Persists.cached(salted)
+      val saltedP = Artifacts.persist(salted)
       val replicatedP = if (replicated eq salted) saltedP else replicated
       val hot = saltedP.groupBy(saltedKeys.map(col): _*)
         .agg(count(lit(1L)).as("__skb_n"))

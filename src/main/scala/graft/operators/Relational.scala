@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
-import graft.operators.Persists.PersistOps
+import graft.operators.Artifacts.PersistOps
 import graft.sources.Tables
 
 /** Relational analytics suite (SURVEY §2.B/§2.C).

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.{cosineWithNorms, dot, localHash60, norm2}
 import graft.sources.Tables
-import graft.operators.Persists.PersistOps
+import graft.operators.Artifacts.PersistOps
 
 /** SURVEY §2.E — similarity search over the `embeddings` table.
   *
@@ -384,6 +384,13 @@ object Similarity {
     (g, sums, arr.last)
   }
 
+  /** The EXACT centered second-moment matrix n·G − S·Sᵀ (Long operands,
+    * one double conversion per cell) behind the PCA faces. */
+  private def embCenteredCov(s: SparkSession, dir: String): Array[Array[Double]] = {
+    val (g, sums, n) = embMoments(s, dir)
+    Array.tabulate(Dim, Dim)((i, j) => (n * g(i)(j) - sums(i) * sums(j)).toDouble)
+  }
+
   /** The embedding-space Gram itself — the distributed half of every
     * second-moment diagnostic over the corpus's embedding matrix (PCA
     * spectrum, whitening, covariance): Dim² exact-integer rows, read
@@ -394,11 +401,6 @@ object Similarity {
       .select(floor(col("idx") / lit(Dim)).cast("bigint").as("i"),
         (col("idx") % lit(Dim)).cast("bigint").as("j"), col("g"))
       .transform(Present.fused("i", "j"))
-
-  /** The trained PCA spectra keyed by dir (the [[trainedByDir]]
-    * trained-literal oracle posture). */
-  private val embPcaByDir =
-    scala.collection.concurrent.TrieMap.empty[String, IndexedSeq[Double]]
 
   /** PCA spectrum of the embedding corpus (eigenvalues of the CENTERED
     * quantized second-moment matrix, top 16) — the intrinsic-
@@ -415,12 +417,8 @@ object Similarity {
     * deterministic doubles; the oracle embeds them as round-trip-exact
     * literals). */
   def embPcaVar(s: SparkSession, dir: String): DataFrame = {
-    val (g, sums, n) = embMoments(s, dir)
-    val cov = Array.tabulate(Dim, Dim)((i, j) =>
-      (n * g(i)(j) - sums(i) * sums(j)).toDouble)
-    val eig = graft.arrays.Eigen.symEigenvalues(cov).take(16)
-    embPcaByDir.update(dir, eig)
-    lastDir.set(dir)
+    val eig = Artifacts.fit(s, dir, "embeddings", "emb_pca_var")(
+      graft.arrays.Eigen.symEigenvalues(embCenteredCov(s, dir)).take(16))
     import s.implicits._
     eig.zipWithIndex.map { case (v, k) => (k.toLong, v) }
       .toDF("k", "lam").transform(Present.fused("k"))
@@ -428,11 +426,6 @@ object Similarity {
 
   /** How many principal components [[embPcaProject]] keeps. */
   val EmbPcaK = 2
-
-  /** The trained eigenVECTORS keyed by dir (rows of Eigen.symEigen's
-    * descending-order basis), for the projection oracle. */
-  private val embPcaVecsByDir =
-    scala.collection.concurrent.TrieMap.empty[String, IndexedSeq[IndexedSeq[Double]]]
 
   /** Project every embedding onto the corpus's top-[[EmbPcaK]]
     * principal directions — [[graft.operators.ArrayQueries.arrPcaProject]]'s
@@ -448,12 +441,8 @@ object Similarity {
     * vector; subtracting the constant mean offset shifts every score
     * equally and is left to the consumer, documented). */
   def embPcaProject(s: SparkSession, dir: String): DataFrame = {
-    val (g, sums, n) = embMoments(s, dir)
-    val cov = Array.tabulate(Dim, Dim)((i, j) =>
-      (n * g(i)(j) - sums(i) * sums(j)).toDouble)
-    val top = graft.arrays.Eigen.symEigen(cov)._2.take(EmbPcaK)
-    embPcaVecsByDir.update(dir, top)
-    lastDir.set(dir)
+    val top = Artifacts.fit(s, dir, "embeddings", "emb_pca_project")(
+      graft.arrays.Eigen.symEigen(embCenteredCov(s, dir))._2.take(EmbPcaK))
     val q = Tables.load(s, dir, "embeddings")
       .select(col("vec_id"),
         transform(col("embedding").cast("array<double>"),
@@ -491,11 +480,6 @@ object Similarity {
   /** How many whitened coordinates [[embWhiten]] emits. */
   val EmbWhitenK = 2
 
-  /** Trained whitening parameters keyed by dir: per mode, (eigenvector,
-    * scale a, offset b) with w = a·(v·q) + b. */
-  private val embWhitenByDir = scala.collection.concurrent.TrieMap
-    .empty[String, IndexedSeq[(IndexedSeq[Double], Double, Double)]]
-
   /** PCA-whitening of the embedding corpus (VERDICT r17 #4's embedding
     * face): the top-[[EmbWhitenK]] whitened coordinates
     * w_k = (v_k·x − v_k·mean)/√λ_k — unit-variance, decorrelated
@@ -509,20 +493,21 @@ object Similarity {
     * operand-for-operand with the oracle. Spec gates mean≈0 / var≈1 /
     * cross-cov≈0 of the emitted coordinates (FunctionsSpec). */
   def embWhiten(s: SparkSession, dir: String): DataFrame = {
-    val (g, sums, n) = embMoments(s, dir)
-    val cov = Array.tabulate(Dim, Dim)((i, j) =>
-      (n * g(i)(j) - sums(i) * sums(j)).toDouble)
-    val (eig, vecs) = graft.arrays.Eigen.symEigen(cov)
-    val nD = n.toDouble
-    val params = (0 until EmbWhitenK).map { k =>
-      require(eig(k) > 1e-9,
-        s"emb_whiten: direction $k has no variance (lam=${eig(k)})")
-      val a = nD / math.sqrt(eig(k))
-      val meanDot = vecs(k).zip(sums).map { case (v, sv) => v * sv.toDouble }.sum / nD
-      (vecs(k), a, -meanDot * a)
+    // per mode: (eigenvector, scale a, offset b) with w = a·(v·q) + b
+    val params = Artifacts.fit(s, dir, "embeddings", "emb_whiten") {
+      val (g, sums, n) = embMoments(s, dir)
+      val cov = Array.tabulate(Dim, Dim)((i, j) =>
+        (n * g(i)(j) - sums(i) * sums(j)).toDouble)
+      val (eig, vecs) = graft.arrays.Eigen.symEigen(cov)
+      val nD = n.toDouble
+      (0 until EmbWhitenK).map { k =>
+        require(eig(k) > 1e-9,
+          s"emb_whiten: direction $k has no variance (lam=${eig(k)})")
+        val a = nD / math.sqrt(eig(k))
+        val meanDot = vecs(k).zip(sums).map { case (v, sv) => v * sv.toDouble }.sum / nD
+        (vecs(k), a, -meanDot * a)
+      }
     }
-    embWhitenByDir.update(dir, params)
-    lastDir.set(dir)
     val q = Tables.load(s, dir, "embeddings")
       .select(col("vec_id"),
         transform(col("embedding").cast("array<double>"),
@@ -1023,15 +1008,6 @@ object Similarity {
   def simIvfpqRecall(s: SparkSession, dir: String): DataFrame =
     annRecall(simIvfpqAnn(s, dir), s, dir)
 
-  /** Residual-codebook memo for [[simIvfpqTrained]] ([[trainedCentroids]]'
-    * pattern: content-fingerprint key, deterministic fit). The coarse
-    * quantizer is THE SAME fit [[simIvfTrained]] memoizes — identical
-    * key on purpose, one trained quantizer serves the whole IVF family. */
-  private val trainedIvfpqCodebooks = new java.util.concurrent.ConcurrentHashMap[
-    (String, Int, Int), IndexedSeq[IndexedSeq[IndexedSeq[Double]]]]()
-  private val ivfpqTrainedByDir = scala.collection.concurrent.TrieMap
-    .empty[String, (IndexedSeq[IndexedSeq[Double]], IndexedSeq[IndexedSeq[IndexedSeq[Double]]])]
-
   /** [[simIvfpqAnn]] with a fully TRAINED model — the FAISS IVFADC
     * training recipe (Jégou et al., TPAMI 2011, §IV): [[trainCentroids]]
     * fits the coarse quantizer (the identical fit AND memo entry
@@ -1048,14 +1024,9 @@ object Similarity {
   def simIvfpqTrained(s: SparkSession, dir: String): DataFrame = {
     val e = Tables.load(s, dir, "embeddings")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
-    def fitCoarse() =
-      trainCentroids(e.select(col("vec_id"), col("emb")), NumCentroids, iters = 3)
-    val fp = embFingerprint(s, dir)
-    val cents = fp match {
-      case Some(f) =>
-        trainedCentroids.computeIfAbsent((s"$dir|$f", NumCentroids, 3), _ => fitCoarse())
-      case None => fitCoarse()
-    }
+    // the coarse quantizer is THE SAME fit (and store entry)
+    // simIvfTrained uses: one trained quantizer serves the IVF family
+    val cents = trainedIvfCentroids(s, dir, e)
     val assigned = e
       .withColumn("cluster", trainedAssignCol(cents))
       .select(col("vec_id"), col("emb"), col("cluster"))
@@ -1065,20 +1036,13 @@ object Similarity {
     val res = assigned.withColumn("remb",
       zip_with(col("emb"), element_at(centArr, col("cluster").cast("int") + 1),
         (x, c) => x - c))
-    def fitCodebooks(): IndexedSeq[IndexedSeq[IndexedSeq[Double]]] =
+    val codebook = Artifacts.fit(s, dir, "embeddings", "sim_ivfpq_codebooks") {
       (0 until NumSubspaces).map(m =>
         trainCentroids(
           res.select(col("vec_id"),
             slice(col("remb"), m * SubDim + 1, SubDim).as("emb")),
           NumCodes, PqIters)).toIndexedSeq
-    val codebook = fp match {
-      case Some(f) =>
-        trainedIvfpqCodebooks.computeIfAbsent((s"$dir|$f", NumCodes, PqIters),
-          _ => fitCodebooks())
-      case None => fitCodebooks()
     }
-    ivfpqTrainedByDir.update(dir, (cents, codebook))
-    lastDir.set(dir)
     ivfpqSearch(assigned, cents, codebook)
   }
 
@@ -1094,11 +1058,6 @@ object Similarity {
     * quality is not the gate, cross-engine search equality is). */
   val PqIters = 2
 
-  /** Per-subspace-trained codebook memo — [[trainedCentroids]]' pattern
-    * (content-fingerprint key, deterministic fit, plain doubles). */
-  private val trainedCodebooks = new java.util.concurrent.ConcurrentHashMap[
-    (String, Int, Int), IndexedSeq[IndexedSeq[IndexedSeq[Double]]]]()
-
   /** [[simPqAnn]] with TRAINED codebooks: each subspace's [[NumCodes]]
     * codewords come from [[trainCentroids]] run on that subspace's
     * sub-vectors (k-means on the slices — the real PQ training loop)
@@ -1110,19 +1069,13 @@ object Similarity {
   def simPqTrained(s: SparkSession, dir: String): DataFrame = {
     val e = Tables.load(s, dir, "embeddings")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
-    def fit(): IndexedSeq[IndexedSeq[IndexedSeq[Double]]] =
+    // an unfingerprintable table trains fresh (no stale-memo risk)
+    val codebook = Artifacts.fit(s, dir, "embeddings", "sim_pq_codebooks") {
       (0 until NumSubspaces).map { m =>
         trainCentroids(e.select(col("vec_id"),
           slice(col("emb"), m * SubDim + 1, SubDim).as("emb")), NumCodes, PqIters)
       }
-    // an unfingerprintable table trains fresh (no stale-memo risk)
-    val codebook = embFingerprint(s, dir) match {
-      case Some(fp) =>
-        trainedCodebooks.computeIfAbsent((s"$dir|$fp", NumCodes, PqIters), _ => fit())
-      case None => fit()
     }
-    pqTrainedByDir.update(dir, codebook)
-    lastDir.set(dir)
     pqSearch(e, codebook)
   }
 
@@ -1177,61 +1130,37 @@ object Similarity {
       .transform(Present.fused("label", "assigned"))
   }
 
-  /** Trained-quantizer memo: k-means fits once per (corpus, k, iters)
-    * and the model is reused — the production IVF lifecycle (train
-    * offline, serve many queries; [[saveCentroids]]/[[loadCentroids]]
-    * is the durable form of the same artifact). Safe because the fit is
-    * deterministic (spec-asserted): the cached value is bit-identical
-    * to retraining. Plain doubles, no Spark state — survives session
-    * restarts. Keyed by a CONTENT fingerprint of the table's files, not
-    * the path alone: data regenerated in place in the same JVM (test
-    * reruns, a harness rewriting testdata) retrains instead of serving
-    * stale centroids. */
-  private val trainedCentroids =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int, Int), IndexedSeq[IndexedSeq[Double]]]()
+  /** The trained coarse quantizer: k-means fits once per corpus and the
+    * model is reused — the production IVF lifecycle (train offline,
+    * serve many queries; [[saveCentroids]]/[[loadCentroids]] is the
+    * durable form of the same artifact). Safe because the fit is
+    * deterministic (spec-asserted): the memoized value is bit-identical
+    * to retraining. A driver-side fit in the Artifacts store, keyed by
+    * the embeddings CONTENT fingerprint: it survives session restarts,
+    * and data regenerated in place in the same JVM retrains instead of
+    * serving stale centroids. The sim_*_trained oracles read the same
+    * entries after the queries have run (Verify's order) and embed the
+    * trained literals; which dir they describe comes from
+    * [[setOracleDir]], falling back to the most recently fitted dir. */
+  private def trainedIvfCentroids(s: SparkSession, dir: String,
+      e: DataFrame): IndexedSeq[IndexedSeq[Double]] =
+    Artifacts.fit(s, dir, "embeddings", "sim_ivf_centroids")(
+      trainCentroids(e.select(col("vec_id"), col("emb")), NumCentroids, iters = 3))
 
   /** Content fingerprint of the embeddings table ([[Tables.fingerprint]]);
     * `None` means "cannot prove freshness" and the caller trains fresh. */
   private[graft] def embFingerprint(s: SparkSession, dir: String): Option[String] =
     Tables.fingerprint(s, dir, "embeddings")
 
-  /** Trained models, keyed BY DIR — read by [[oracles]] AFTER the
-    * queries have run (Verify's order) to embed the trained literals
-    * into the sim_*_trained oracle SQL. Keying by dir (not a single
-    * slot) makes training two dirs in one JVM safe: each dir's oracle
-    * embeds its own fit. Which dir the oracles describe comes from
-    * [[setOracleDir]] (Verify pins its sfDir), falling back to the most
-    * recently trained dir for ad-hoc use. */
-  private val trainedByDir =
-    scala.collection.concurrent.TrieMap.empty[String, IndexedSeq[IndexedSeq[Double]]]
-  private val pqTrainedByDir =
-    scala.collection.concurrent.TrieMap.empty[String, IndexedSeq[IndexedSeq[IndexedSeq[Double]]]]
-  private val oracleDir =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
-  private val lastDir =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
-
   /** Pin which dir's trained models [[oracles]] embeds (Verify sets its
     * sfDir before dumping oracle_sql.json). */
-  def setOracleDir(dir: String): Unit = oracleDir.set(dir)
-
-  private def dirForOracles: Option[String] =
-    Option(oracleDir.get).orElse(Option(lastDir.get))
+  def setOracleDir(dir: String): Unit = Artifacts.setOracleDir(dir)
 
   def simIvfTrained(s: SparkSession, dir: String): DataFrame = {
     val e = Tables.load(s, dir, "embeddings")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
       .withColumn("n2", norm2(col("emb")))
-    def fit() = trainCentroids(e.select(col("vec_id"), col("emb")), NumCentroids, iters = 3)
-    // an unfingerprintable table (missing/unlistable path) trains fresh
-    // rather than risking a stale memo hit
-    val cents = embFingerprint(s, dir) match {
-      case Some(fp) =>
-        trainedCentroids.computeIfAbsent((s"$dir|$fp", NumCentroids, 3), _ => fit())
-      case None => fit()
-    }
-    trainedByDir.update(dir, cents)
-    lastDir.set(dir)
+    val cents = trainedIvfCentroids(s, dir, e)
     // d2 up to the per-row |x|^2 constant: |c|^2 - 2<x,c>
     val distStructs = cents.zipWithIndex.map { case (c, i) =>
       struct(
@@ -1260,29 +1189,31 @@ object Similarity {
 
   /** `def`, not `val`: the sim_*_trained oracles exist only after their
     * queries have trained (Verify runs every query BEFORE dumping
-    * oracle_sql.json, so by then [[trainedByDir]]/[[pqTrainedByDir]]
-    * hold the fits for [[dirForOracles]]). The oracles replay only the
+    * oracle_sql.json, so by then the store holds the fits for the oracle
+    * dir — [[Artifacts.forOracle]]). The oracles replay only the
     * SEARCH — the trained values are embedded as round-trip-exact double
     * literals, exactly as [[simIvfAnn]]/[[simPqAnn]] embed their fixed
     * ones — so the engine-specific training summation order never
     * crosses engines. */
   def oracles: Map[String, String] = {
-    val d = dirForOracles
+    type Cents = IndexedSeq[IndexedSeq[Double]]
+    type Codebook = IndexedSeq[IndexedSeq[IndexedSeq[Double]]]
+    val cents = Artifacts.forOracle[Cents]("sim_ivf_centroids")
     staticOracles ++
-      d.flatMap(trainedByDir.get)
+      cents
         .map(c => Map("sim_ivf_trained" -> trainedIvfSql(c)))
         .getOrElse(Map.empty) ++
-      d.flatMap(pqTrainedByDir.get)
+      Artifacts.forOracle[Codebook]("sim_pq_codebooks")
         .map(c => Map("sim_pq_trained" -> trainedPqSql(c)))
         .getOrElse(Map.empty) ++
-      d.flatMap(ivfpqTrainedByDir.get)
+      cents.zip(Artifacts.forOracle[Codebook]("sim_ivfpq_codebooks"))
         .map { case (c, cb) =>
           val sql = trainedIvfpqSql(c, cb)
           Map("sim_ivfpq_trained" -> sql,
             "sim_ivfpq_trained_recall" -> recallOracleSql(sql))
         }
         .getOrElse(Map.empty) ++
-      d.flatMap(embPcaByDir.get)
+      Artifacts.forOracle[IndexedSeq[Double]]("emb_pca_var")
         .map { eig =>
           val rows = eig.zipWithIndex
             .map { case (v, k) => s"(CAST($k AS BIGINT), ${fmtD(v)})" }
@@ -1291,7 +1222,7 @@ object Similarity {
             s"SELECT k, lam FROM (VALUES $rows) AS t(k, lam) ORDER BY k")
         }
         .getOrElse(Map.empty) ++
-      d.flatMap(embWhitenByDir.get)
+      Artifacts.forOracle[IndexedSeq[(IndexedSeq[Double], Double, Double)]]("emb_whiten")
         .map { params =>
           // the identical quantized fold × literal eigenvector, then
           // the identical affine map (fold * a) + b
@@ -1312,7 +1243,7 @@ object Similarity {
                |FROM qq ORDER BY vec_id""".stripMargin)
         }
         .getOrElse(Map.empty) ++
-      d.flatMap(embPcaVecsByDir.get)
+      Artifacts.forOracle[Cents]("emb_pca_project")
         .map { top =>
           // the identical ascending-dim left fold over the identical
           // quantized integers × round-trip-exact literal weights

@@ -6,7 +6,7 @@ import org.apache.spark.sql.expressions.Window
 
 import graft.functions.{hash60, hitCount, shingles, tokens}
 import graft.sources.Tables
-import graft.operators.Persists.PersistOps
+import graft.operators.Artifacts.PersistOps
 
 /** SURVEY §2.F — text analysis over `documents`: token counting, quality
   * scoring, heuristic language ID, fingerprinting. All per-document map
@@ -43,7 +43,6 @@ object TextAnalysis {
       size(col("tk")).cast("bigint").as("n_tokens"),
       regexp_count(col("text"), lit("[a-z]+")).cast("bigint").as("n_alpha_runs"),
       length(col("text")).cast("bigint").as("n_chars_txt"))
-      .transform(Present.spreadSortedTail("doc_id"))
 
   /** Lexical-diversity profile per document — the vocabulary-richness
     * gate next to [[txtQuality]]'s surface heuristics (a low type-token
@@ -95,7 +94,6 @@ object TextAnalysis {
 
   def txtQuality(s: SparkSession, dir: String): DataFrame =
     qualityCols(withTokensSorted(s, dir))
-      .transform(Present.spreadSortedTail("doc_id"))
 
   /** The language-ID prediction columns over a tokenized relation —
     * shared by [[txtLangid]] (sorted per-doc face) and
@@ -118,7 +116,6 @@ object TextAnalysis {
   /** Heuristic language ID from stopword profiles, checked vs the label. */
   def txtLangid(s: SparkSession, dir: String): DataFrame =
     langidPred(withTokensSorted(s, dir))
-      .transform(Present.spreadSortedTail("doc_id"))
 
   /** Language-ID CONFUSION MATRIX — the evaluation a curator reads
     * after [[txtLangid]]'s per-doc predictions (which languages leak
@@ -146,7 +143,6 @@ object TextAnalysis {
       // min over the distinct-gram hash set == min over all gram hashes
       array_min(org.apache.spark.sql.graftexpr.TextExpressions
         .hashWordNgrams(col("text"), 3)).as("fp_min_shingle"))
-      .transform(Present.spreadSortedTail("doc_id"))
 
   /** PII scrubbing: multi-pattern regex redaction with per-pattern match
     * counts and a checksum of the scrubbed text — all narrow codegen'd
@@ -180,7 +176,6 @@ object TextAnalysis {
       regexp_count(col("txt"), lit(PhoneRe)).cast("bigint").as("n_phones"),
       md5(regexp_replace(regexp_replace(col("txt"), EmailRe, "<EMAIL>"),
         PhoneRe, "<PHONE>")).as("scrubbed_md5"))
-      .transform(Present.spreadSortedTail("doc_id"))
   }
 
   /** Corpus-level phrase statistics: the global top-20 word bigrams by
@@ -346,12 +341,6 @@ object TextAnalysis {
   val ClfSampleCap = 4096
   val ClfEpochs = 10
 
-  private val clfByDir =
-    scala.collection.concurrent.TrieMap.empty[String, (IndexedSeq[Long], Long)]
-  private val clfCache =
-    scala.collection.concurrent.TrieMap
-      .empty[(SparkSession, String), (String, (IndexedSeq[Long], Long))]
-
   /** Train (or serve the memoized fit of) the quality perceptron for
     * `dir`. Deterministic: the sample is doc_id-filtered and
     * doc_id-ordered, epochs visit it in that order, and all arithmetic
@@ -396,21 +385,8 @@ object TextAnalysis {
       (w.toIndexedSeq, b)
     }
     // an unfingerprintable table trains fresh rather than risking a
-    // stale memo hit (the Similarity.trainedCentroids posture)
-    val model = Tables.fingerprint(s, dir, "documents") match {
-      case None => fit()
-      case Some(fp) =>
-        clfCache.get((s, dir)) match {
-          case Some((`fp`, m)) => m
-          case _ =>
-            val m = fit()
-            clfCache.update((s, dir), (fp, m))
-            m
-        }
-    }
-    clfByDir.update(dir, model)
-    lastDirRef.set(dir)
-    model
+    // stale memo hit
+    Artifacts.fit(s, dir, "documents", "txt_clf")(fit())
   }
 
   /** The serving margin as a Column over the token-array column: one
@@ -428,7 +404,6 @@ object TextAnalysis {
       .select(col("doc_id"), clfMarginCol(w, bias, col("tk")).as("margin"))
       .select(col("doc_id"), col("margin"),
         when(col("margin") > 0L, 1L).otherwise(0L).as("keep"))
-      .transform(Present.spreadSortedTail("doc_id"))
   }
 
   /** Oracle: replay the scoring from LITERAL trained weights — murmur3
@@ -478,12 +453,6 @@ object TextAnalysis {
       biQ: IndexedSeq[(String, String, Long)],
       unkQ: Long,
       backQ: Long)
-
-  private val lmByDir =
-    scala.collection.concurrent.TrieMap.empty[String, LmModel]
-  private val lmCache =
-    scala.collection.concurrent.TrieMap
-      .empty[(SparkSession, String), (String, LmModel)]
 
   /** Train (or serve the memoized fit of) the stupid-backoff bigram LM
     * for `dir` — the perplexity-style quality signal every modern
@@ -551,20 +520,7 @@ object TextAnalysis {
     }
     // an unfingerprintable table trains fresh rather than risking a
     // stale memo hit (the trainedClassifier posture)
-    val model = Tables.fingerprint(s, dir, "documents") match {
-      case None => fit()
-      case Some(fp) =>
-        lmCache.get((s, dir)) match {
-          case Some((`fp`, m)) => m
-          case _ =>
-            val m = fit()
-            lmCache.update((s, dir), (fp, m))
-            m
-        }
-    }
-    lmByDir.update(dir, model)
-    lastDirRef.set(dir)
-    model
+    Artifacts.fit(s, dir, "documents", "txt_lm")(fit())
   }
 
   /** LM quality scoring (serving): per-document total and mean
@@ -613,7 +569,6 @@ object TextAnalysis {
         when(col("n_tokens") > 0L &&
           col("qlog_sum") >= col("n_tokens") * lit(LmKeepThrQ), 1L)
           .otherwise(0L).as("keep"))
-      .transform(Present.spreadSortedTail("doc_id"))
   }
 
   /** Oracle: replay the scoring from the LITERAL trained tables — the
@@ -733,65 +688,16 @@ object TextAnalysis {
   private[operators] val BpeTokensSql =
     "list_filter(string_split(text, ' '), x -> len(x) > 0 AND NOT contains(x, '|'))"
 
-  /** Trained merge tables memoized per (session, dir) and keyed by the
-    * documents fingerprint — the [[graft.operators.Similarity]]
-    * trained-model posture: Verify/Bench passes reuse one training run
-    * instead of re-looping per query execution. LRU beyond cap 16 with
-    * stopped-session entries evicted first (the [[Dedup]] ccCache
-    * posture) so a long-lived session over many dirs stays bounded;
-    * entries are k-row merge tables, so recomputation is the only cost
-    * of an eviction. */
-  private val bpeCache = new java.util.LinkedHashMap[
-    (SparkSession, String), (String, Seq[(Long, String, String, Long)])](32, 0.75f, true)
-
-  /** Trained merge tables keyed BY DIR — read by [[oracles]] AFTER the
-    * queries have run (Verify's order) to embed the trained merges into
-    * the txt_bpe_encode/txt_bpe_freq oracle SQL (the
-    * [[Similarity.oracles]] trained-literal posture). */
-  private val mergesByDir =
-    scala.collection.concurrent.TrieMap.empty[String, Seq[(Long, String, String, Long)]]
-  private val oracleDirRef =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
-  private val lastDirRef =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
-
-  /** Pin which dir's trained merges [[oracles]] embeds (Verify sets its
+  /** Pin which dir's trained models [[oracles]] embeds (Verify sets its
     * sfDir before dumping oracle_sql.json). */
-  def setOracleDir(dir: String): Unit = oracleDirRef.set(dir)
-
-  private def dirForOracles: Option[String] =
-    Option(oracleDirRef.get).orElse(Option(lastDirRef.get))
+  def setOracleDir(dir: String): Unit = Artifacts.setOracleDir(dir)
 
   /** The memoized trained merge table for `dir` — trains on first use
     * (see [[trainBpe]]); every BPE face (vocab/encode/freq) and the
-    * oracle generator serve from the same fit. */
-  private[graft] def trainedMerges(s: SparkSession, dir: String): Seq[(Long, String, String, Long)] = {
-    val merges = Tables.fingerprint(s, dir, "documents") match {
-      case None => trainBpe(s, dir) // unverifiable content: no memo
-      case Some(fp) =>
-        val key = (s, dir)
-        (bpeCache.synchronized {
-          if (bpeCache.size > 16) {
-            val dead = bpeCache.keySet.iterator
-            while (dead.hasNext) if (dead.next()._1.sparkContext.isStopped) dead.remove()
-          }
-          val lru = bpeCache.keySet.iterator
-          while (bpeCache.size > 16 && lru.hasNext) {
-            if (lru.next() != key) lru.remove()
-          }
-          Option(bpeCache.get(key))
-        }) match {
-          case Some((`fp`, m)) => m
-          case _ =>
-            val m = trainBpe(s, dir)
-            bpeCache.synchronized { bpeCache.put(key, (fp, m)): Unit }
-            m
-        }
-    }
-    mergesByDir.update(dir, merges)
-    lastDirRef.set(dir)
-    merges
-  }
+    * oracle generator serve from the same fit, a driver-side entry of
+    * the Artifacts store keyed by the documents contents. */
+  private[graft] def trainedMerges(s: SparkSession, dir: String): Seq[(Long, String, String, Long)] =
+    Artifacts.fit(s, dir, "documents", "txt_bpe_merges")(trainBpe(s, dir))
 
   /** The BPE pair-merge training loop (tokenizer training's core pass).
     *
@@ -1269,7 +1175,7 @@ object TextAnalysis {
     * oracles ([[Pipeline]]'s BPE-budgeted packing) — same
     * after-training contract as [[oracles]]. */
   private[operators] def oracleMerges: Option[Seq[(Long, String, String, Long)]] =
-    dirForOracles.flatMap(mergesByDir.get)
+    Artifacts.forOracle("txt_bpe_merges")
 
   /** Oracle-side twin of [[bpeDocCounts]]'s `(doc_id, n_bpe)` face, for
     * composition into sibling operators' generated SQL: per-doc BPE
@@ -1426,25 +1332,16 @@ object TextAnalysis {
     vocab.map(p => SpPiece(p, probs(p), math.floor(1e6 * math.log(probs(p))).toLong))
   }
 
-  /** Trained unigram models, memoized like [[bpeCache]]; the per-dir
-    * maps feed the trained-literal oracles. `spWordsByDir` additionally
-    * carries the driver Viterbi segmentation of every collected word
-    * TYPE — the bounded artifact the encode oracle joins against (total
-    * over the test corpora; capped at [[BpeMaxTrainTypes]] like
-    * training itself, a declared precondition of the oracle replay —
-    * SERVING has no such bound, the kernel segments any word live). */
-  private val spCache = new java.util.LinkedHashMap[
-    (SparkSession, String), (String, Seq[SpPiece])](32, 0.75f, true)
-  private val spByDir =
-    scala.collection.concurrent.TrieMap.empty[String, Seq[SpPiece]]
-  private val spWordsByDir =
-    scala.collection.concurrent.TrieMap.empty[String, Seq[(String, Long, Long, String)]]
-
   /** The trained word-type segmentation artifact available to SIBLING
     * operators' generated oracles ([[Pipeline]]'s sp-budgeted packing)
-    * — same after-training contract as [[oracles]]. */
+    * — same after-training contract as [[oracles]]. It carries the
+    * driver Viterbi segmentation of every collected word TYPE — the
+    * bounded artifact the encode oracle joins against (total over the
+    * test corpora; capped at [[BpeMaxTrainTypes]] like training itself,
+    * a declared precondition of the oracle replay — SERVING has no such
+    * bound, the kernel segments any word live). */
   private[operators] def oracleSpWords: Option[Seq[(String, Long, Long, String)]] =
-    dirForOracles.flatMap(spWordsByDir.get)
+    Artifacts.forOracle("txt_sp_words")
 
   private def spModelMap(m: Seq[SpPiece]): java.util.HashMap[String, java.lang.Long] = {
     val h = new java.util.HashMap[String, java.lang.Long](m.size * 2)
@@ -1453,32 +1350,15 @@ object TextAnalysis {
   }
 
   private[graft] def trainedSp(s: SparkSession, dir: String): Seq[SpPiece] = {
-    def fit(): Seq[SpPiece] = trainUnigram(spTrainTypes(s, dir))
-    val m = Tables.fingerprint(s, dir, "documents") match {
-      case None => fit() // unverifiable content: no memo
-      case Some(fp) =>
-        val key = (s, dir)
-        (spCache.synchronized {
-          if (spCache.size > 16) {
-            val dead = spCache.keySet.iterator
-            while (dead.hasNext) if (dead.next()._1.sparkContext.isStopped) dead.remove()
-          }
-          val lru = spCache.keySet.iterator
-          while (spCache.size > 16 && lru.hasNext) {
-            if (lru.next() != key) lru.remove()
-          }
-          Option(spCache.get(key))
-        }) match {
-          case Some((`fp`, mm)) => mm
-          case _ =>
-            val mm = fit()
-            spCache.synchronized { spCache.put(key, (fp, mm)): Unit }
-            mm
-        }
-    }
-    spByDir.update(dir, m)
-    // the encode/freq-oracle artifact: driver Viterbi over the word
-    // types through the SAME spSegment/spPiecesEval the kernels call
+    val m = Artifacts.fit(s, dir, "documents", "txt_sp")(trainUnigram(spTrainTypes(s, dir)))
+    Artifacts.fit(s, dir, "documents", "txt_sp_words")(spWords(s, dir, m))
+    m
+  }
+
+  /** The encode/freq-oracle artifact: driver Viterbi over the word
+    * types through the SAME spSegment/spPiecesEval the kernels call. */
+  private def spWords(s: SparkSession, dir: String,
+      m: Seq[SpPiece]): Seq[(String, Long, Long, String)] = {
     val h = spModelMap(m)
     val trainTypes = spTrainTypes(s, dir)
     // The oracle replay INNER-joins document words against this table;
@@ -1493,7 +1373,7 @@ object TextAnalysis {
         s"capped type table cannot replay serving-side segmentation of " +
         s"out-of-table words — refusing to emit txt_sp_encode/txt_sp_freq " +
         s"oracles for $dir")
-    spWordsByDir.update(dir, trainTypes.map { case (w, _) =>
+    trainTypes.map { case (w, _) =>
       val r = org.apache.spark.sql.graftexpr.TextExpressions
         .spSegment(w, h, SpMaxPieceLen, SpUnkQ)
       val ps = org.apache.spark.sql.graftexpr.TextExpressions.spPiecesEval(
@@ -1503,46 +1383,25 @@ object TextAnalysis {
       val pcs = (0 until ps.numElements())
         .map(i => ps.getUTF8String(i).toString).mkString(" ")
       (w, r(0), r(1), pcs)
-    })
-    lastDirRef.set(dir)
-    m
+    }
   }
 
   /** The one distributed pass of unigram training: the word-type
     * frequency table over the PLAIN whitespace tokens (no '|' carve-out
     * — unigram needs no delimiter encoding), top-[[BpeMaxTrainTypes]]
-    * by (count, word). Memoized per (session, dir, fingerprint) via the
+    * by (count, word). Memoized by the documents contents via the
     * same collect the driver trainer reads. */
-  private val spTypesCache = new java.util.LinkedHashMap[
-    (SparkSession, String), (String, Seq[(String, Long)])](32, 0.75f, true)
-  private def spTrainTypes(s: SparkSession, dir: String): Seq[(String, Long)] = {
-    def run(): Seq[(String, Long)] = Tables.load(s, dir, "documents")
-      .select(explode(org.apache.spark.sql.graftexpr.TextExpressions
-        .wordNgrams(col("text"), 1)).as("w"))
-      .groupBy("w").agg(count(lit(1)).as("cnt"))
-      .orderBy(col("cnt").desc, col("w").asc)
-      .limit(BpeMaxTrainTypes)
-      .collect()
-      .map(r => (r.getString(0), r.getLong(1))).toSeq
-    Tables.fingerprint(s, dir, "documents") match {
-      case None => run()
-      case Some(fp) =>
-        val key = (s, dir)
-        (spTypesCache.synchronized {
-          val lru = spTypesCache.keySet.iterator
-          while (spTypesCache.size > 16 && lru.hasNext) {
-            if (lru.next() != key) lru.remove()
-          }
-          Option(spTypesCache.get(key))
-        }) match {
-          case Some((`fp`, t)) => t
-          case _ =>
-            val t = run()
-            spTypesCache.synchronized { spTypesCache.put(key, (fp, t)): Unit }
-            t
-        }
+  private def spTrainTypes(s: SparkSession, dir: String): Seq[(String, Long)] =
+    Artifacts.fit(s, dir, "documents", "txt_sp_types") {
+      Tables.load(s, dir, "documents")
+        .select(explode(org.apache.spark.sql.graftexpr.TextExpressions
+          .wordNgrams(col("text"), 1)).as("w"))
+        .groupBy("w").agg(count(lit(1)).as("cnt"))
+        .orderBy(col("cnt").desc, col("w").asc)
+        .limit(BpeMaxTrainTypes)
+        .collect()
+        .map(r => (r.getString(0), r.getLong(1))).toSeq
     }
-  }
 
   /** The TRAINED unigram piece table (piece, micro-nat score) — the
     * model artifact a serving stack ships (txt_bpe_vocab's sibling for
@@ -1577,7 +1436,6 @@ object TextAnalysis {
         element_at(col("st"), 2).as("n_wcps"),
         element_at(col("st"), 3).as("n_pieces"),
         element_at(col("st"), 4).as("qscore_sum"))
-      .transform(Present.spreadSortedTail("doc_id"))
   }
 
   /** Corpus unigram piece distribution (top-30) — txt_bpe_freq's twin
@@ -1676,19 +1534,19 @@ object TextAnalysis {
   }
 
   def oracles: Map[String, String] = staticOracles ++
-    dirForOracles.flatMap(spByDir.get).map { m =>
+    Artifacts.forOracle[Seq[SpPiece]]("txt_sp").map { m =>
       Map("txt_sp_unigram" -> spUnigramSql(m))
     }.getOrElse(Map.empty) ++
-    dirForOracles.flatMap(spWordsByDir.get).map { ws =>
+    oracleSpWords.map { ws =>
       Map("txt_sp_encode" -> spEncodeSql(ws), "txt_sp_freq" -> spFreqSql(ws))
     }.getOrElse(Map.empty) ++
-    dirForOracles.flatMap(mergesByDir.get).map { m =>
+    oracleMerges.map { m =>
       Map("txt_bpe_encode" -> bpeEncodeSql(m), "txt_bpe_freq" -> bpeFreqSql(m))
     }.getOrElse(Map.empty) ++
-    dirForOracles.flatMap(clfByDir.get).map { case (w, b) =>
+    Artifacts.forOracle[(IndexedSeq[Long], Long)]("txt_clf").map { case (w, b) =>
       Map("txt_classifier_score" -> clfScoreSql(w, b))
     }.getOrElse(Map.empty) ++
-    dirForOracles.flatMap(lmByDir.get).map { m =>
+    Artifacts.forOracle[LmModel]("txt_lm").map { m =>
       Map("txt_lm_score" -> lmScoreSql(m))
     }.getOrElse(Map.empty)
 

@@ -13,19 +13,16 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  // DataFrames are immutable logical plans: memoize per (session, path) so
-  // repeated queries skip re-listing files and re-reading parquet footers.
-  // Crude bound: the map pins SparkSessions, so a long-lived JVM cycling
-  // sessions would leak without the clear-on-overflow.
-  private val cache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  // DataFrames are immutable logical plans: memoize per (session, path)
+  // and file contents (the Artifacts store) so repeated queries skip
+  // re-listing files and re-reading parquet footers, while a table
+  // rewritten in place is listed afresh.
 
   /** Drop all memoized frames (e.g. after replacing a dead session). */
-  def clearCache(): Unit = cache.clear()
+  def clearCache(): Unit = graft.operators.Artifacts.forget(_.startsWith("table:"))
 
-  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    if (cache.size > 256) cache.clear()
-    cache.getOrElseUpdate((spark, s"$dir/$name.parquet"), {
+  def load(spark: SparkSession, dir: String, name: String): DataFrame =
+    graft.operators.Artifacts.scoped(spark, dir, name, s"table:$name") {
       val df = spark.read.parquet(s"$dir/$name.parquet")
       // events.ts has shipped as TIMESTAMP(NANOS) — which Spark only reads
       // as a long (spark.sql.legacy.parquet.nanosAsLong=true, set in our
@@ -46,8 +43,7 @@ object Tables {
           case _ => df
         }
       } else df
-    })
-  }
+    }
 
   /** Register every table as a temp view (for spark.sql users). */
   def registerAll(spark: SparkSession, dir: String): Unit =
@@ -57,9 +53,9 @@ object Tables {
     * Hadoop FileSystem API so it works wherever the table lives
     * (HDFS/S3/local — a `java.io.File` walk NPEs on any non-local path).
     * `None` when the path is missing or unlistable; callers treat that
-    * as "cannot prove freshness" and skip their memo. Used to key
-    * derived-relation caches (trained centroids, tokenized corpora) so
-    * data regenerated in place invalidates them. */
+    * as "cannot prove freshness" and skip their memo. Keys every
+    * [[graft.operators.Artifacts]] entry derived from a table, so data
+    * regenerated in place invalidates it. */
   def fingerprint(spark: SparkSession, dir: String, name: String): Option[String] = {
     import org.apache.hadoop.fs.{FileStatus, Path}
     try {

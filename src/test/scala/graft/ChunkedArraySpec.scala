@@ -739,23 +739,29 @@ class ChunkedArraySpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("release unpersists memoized chunk relations (memory release contract)") {
-    import graft.operators.{ArrayQueries, Persists}
-    // storageLevel is a cache lookup by PLAN — run the contract on the
-    // underlying full-tree frames (r22 leaf re-rooting off); the leaf
-    // only changes what consumers embed, not the persist lifecycle
-    Persists.cacheLeaf = false
-    try {
-      val dir = "/root/testdata/sf0.001"
-      val arr = ArrayQueries.eventsArray1dCached(spark, dir)
-      arr.df.count()
-      assert(arr.df.storageLevel.useMemory || arr.df.storageLevel.useDisk)
-      ArrayQueries.release(spark)
-      assert(arr.df.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-      // next request rebuilds and re-persists, then clean up again
-      val arr2 = ArrayQueries.eventsArray1dCached(spark, dir)
-      assert(arr2.df.storageLevel.useMemory || arr2.df.storageLevel.useDisk)
-      ArrayQueries.release(spark)
-    } finally Persists.cacheLeaf = true
+    import graft.operators.{ArrayQueries, Artifacts}
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    // served arrays are re-rooted at their cache entry's InMemoryRelation;
+    // the store's own entry is the persisted full-tree frame
+    def leafOf(a: ChunkedArray) = a.df.queryExecution.analyzed match {
+      case imr: InMemoryRelation => imr.cacheBuilder
+      case other => fail(s"expected a bare InMemoryRelation leaf, got:\n$other")
+    }
+    val dir = "/root/testdata/sf0.001"
+    val arr = ArrayQueries.eventsArray1dCached(spark, dir)
+    arr.df.count()
+    val held = Artifacts.held(spark)
+    assert(held.nonEmpty && held.forall(d => d.storageLevel.useMemory || d.storageLevel.useDisk))
+    assert(leafOf(arr).isCachedColumnBuffersLoaded)
+    ArrayQueries.release(spark)
+    assert(held.forall(_.storageLevel == org.apache.spark.storage.StorageLevel.NONE))
+    assert(!leafOf(arr).isCachedColumnBuffersLoaded)
+    assert(Artifacts.held(spark).isEmpty)
+    // next request rebuilds and re-persists, then clean up again
+    val arr2 = ArrayQueries.eventsArray1dCached(spark, dir)
+    assert(!(leafOf(arr2) eq leafOf(arr)))
+    assert(Artifacts.held(spark).exists(d => d.storageLevel.useMemory || d.storageLevel.useDisk))
+    ArrayQueries.release(spark)
   }
 
   /** Flatten to (timestep, global coords) -> value with independent

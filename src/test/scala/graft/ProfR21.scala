@@ -10,7 +10,8 @@ import org.apache.spark.sql.SparkSession
 object ProfR21 {
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get("/tmp/spark-events"))
     val spark = SparkSession.builder()
       .withExtensions(new GraftExtensions)

@@ -109,4 +109,22 @@ class QuantKernelSpec extends AnyFunSuite {
       java.lang.Double.doubleToRawLongBits(r.getDouble(i))))
     assert(dec.collect().map(bits).toSeq == cen.collect().map(bits).toSeq)
   }
+
+  test("cents rounds the DOUBLE product half-up: exact only to 2 fraction digits") {
+    // 3-fraction-digit inputs are outside cents' precondition. The helper
+    // rounds x * 100 as a double, so it agrees with the decimal spelling
+    // where that product lands on .5 exactly (2.675, 0.125, -0.125) and
+    // parts from it where the product falls below .5 (1.005 * 100 =
+    // 100.49999999999999 -> 100, while CAST(1.005 AS DECIMAL(18,2)) = 1.01).
+    val cases = Seq(
+      1.005 -> (100L, 101L), 2.675 -> (268L, 268L), 0.125 -> (13L, 13L),
+      -0.125 -> (-13L, -13L), 1.115 -> (112L, 112L), 10.555 -> (1056L, 1056L),
+      // inside the precondition: the product's ulp noise never matters
+      19.99 -> (1999L, 1999L), 4.35 -> (435L, 435L), 0.07 -> (7L, 7L))
+    val got = cases.map(_._1).toDF("x")
+      .select(operators.Relational.cents("x"),
+        (col("x").cast("decimal(18,2)") * 100).cast("long"))
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    assert(got == cases.map(_._2))
+  }
 }

@@ -15,7 +15,7 @@ cd "$(dirname "$0")/.."
 ROUND="${1:?usage: tools/seal.sh <round-number>}"
 
 SPARK_GRAFT_SF_DIR="${SPARK_GRAFT_SF_DIR:-/root/testdata/sf0.1}" \
-  SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-32}" \
+  SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-$(nproc)}" \
   SPARK_GRAFT_BENCH_REQUIRE_IDLE=1 \
   sbt -batch "runMain graft.Bench"
 
