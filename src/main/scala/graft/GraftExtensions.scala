@@ -22,7 +22,8 @@ import org.apache.spark.sql.graftexpr.{CdcChunks, DotProduct, GramLong, GramWide
   * exact set Jaccard. `graft_heavy_hitters(item, k)` registers the
   * Misra-Gries frequent-items aggregate and `graft_gram(qvec, dim)`
   * the one-pass Gram/sums/count moments aggregate (k/dim likewise
-  * literals).
+  * literals). [[graft.operators.Present.SortShape]] plans each
+  * presentation sort from the sizes AQE has measured.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -93,6 +94,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     })
     // Plans graft's TopKPerKey logical node as the bounded-heap operator.
     ext.injectPlannerStrategy(_ => org.apache.spark.sql.graftexpr.TopKStrategy)
+    // Picks the physical shape of every presentation `.orderBy`.
+    ext.injectQueryStagePrepRule(_ => graft.operators.Present.SortShape)
   }
 }
 

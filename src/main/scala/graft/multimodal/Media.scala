@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.sources.Tables
-import graft.operators.Present
 
 /** One media asset: opaque payload + typed metadata. At 100 TB the
   * payload column stays opaque (binary) until the last possible moment;
@@ -154,7 +153,7 @@ object Media {
         sum(col("nBytes")).as("total_bytes"),
         sum(col("checksum")).as("total_checksum"),
         sum(element_at(col("histogram"), 8)).as("hist_bin7"))
-      .transform(Present.fused("kind"))
+      .orderBy("kind")
 
   /** Resize as an oracle-gated query: factor-2 byte subsample of each
     * image-kind payload through [[resizeStub]]'s typed per-partition
@@ -188,7 +187,7 @@ object Media {
         count(lit(1)).as("n_distinct"),
         sum(col("cnt") - 1).as("n_dupes"),
         sum((col("cnt") - 1) * col("nb")).as("dupe_bytes"))
-      .transform(Present.fused("kind"))
+      .orderBy("kind")
   }
 
   /** Average-hash bits of one payload — the perceptual-hash (aHash)
@@ -501,7 +500,7 @@ object Media {
       .join(losers.hint("shuffle_hash"), col("id") === col("v"), "left_anti")
       .groupBy("kind")
       .agg(count(lit(1)).as("n_kept"), sum(col("nBytes")).as("kept_bytes"))
-      .transform(Present.fused("kind"))
+      .orderBy("kind")
   }
 
   /** Oracle-checkable metadata extraction (no stubbed values). */
@@ -531,7 +530,7 @@ object Media {
         min(col("nBytes")).as("min_bytes"),
         max(col("nBytes")).as("max_bytes"),
         sum(col("nBytes")).as("total_bytes"))
-      .transform(Present.fused("kind", "bucket"))
+      .orderBy("kind", "bucket")
 
   /** Member-level perceptual CTEs for the cluster/keep-one oracles:
     * `ahashed(doc_id, ahash)` and `whashed(doc_id, whash)` — the

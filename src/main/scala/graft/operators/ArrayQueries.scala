@@ -204,12 +204,12 @@ object ArrayQueries {
 
   /** doreisa `array.sum().compute()` per timestep (tests/test_doreisa.py:19). */
   def arrSumTs(s: SparkSession, dir: String): DataFrame =
-    eventsArray1dCached(s, dir).sumPerTimestep("total").transform(Present.fused("timestep"))
+    eventsArray1dCached(s, dir).sumPerTimestep("total").orderBy("timestep")
 
   /** Value histogram across every chunk of the live array (dask
     * `da.histogram` analog) — bucket partials fold chunk-locally. */
   def arrHistogram(s: SparkSession, dir: String): DataFrame =
-    eventsArray1dCached(s, dir).histogram(100.0).transform(Present.fused("bucket"))
+    eventsArray1dCached(s, dir).histogram(100.0).orderBy("bucket")
 
   /** Rechunk 4x16 -> 8x8 then per-timestep stats (dask `rechunk`):
     * the oracle is the SAME SQL as arr_stats_ts — stats are invariant
@@ -217,12 +217,12 @@ object ArrayQueries {
     * wrong offset, lost or doubled cell) breaks the hash match. */
   def arrRechunkStats(s: SparkSession, dir: String): DataFrame =
     eventsArray1dCached(s, dir).rechunk(Seq(8)).statsPerTimestep
-      .transform(Present.fused("timestep"))
+      .orderBy("timestep")
 
   /** dask `cumsum` on the 1-d array: chunk-local native prefix + an
     * O(#chunks) carry window — the distributed scan pattern. */
   def arrCumsum(s: SparkSession, dir: String): DataFrame =
-    eventsArray1dCached(s, dir).cumsumRows().transform(Present.fused("timestep", "idx"))
+    eventsArray1dCached(s, dir).cumsumRows().orderBy("timestep", "idx")
 
   /** dask boolean-mask COMPACTION `a[a > 50]` (boolean indexing as an
     * array — doreisa/window_api.py:38-119): per-chunk native match
@@ -230,16 +230,16 @@ object ArrayQueries {
     * global output addresses without any corpus-wide rank. */
   def arrCompress(s: SparkSession, dir: String): DataFrame =
     eventsArray1dCached(s, dir).compressRows(_ > lit(50.0))
-      .transform(Present.fused("timestep", "idx"))
+      .orderBy("timestep", "idx")
 
   /** dask `arr.var()` per timestep: exact decimal moments, double math
     * only on the final three exact operands. */
   def arrVarTs(s: SparkSession, dir: String): DataFrame =
-    eventsArray1dCached(s, dir).variancePerTimestep.transform(Present.fused("timestep"))
+    eventsArray1dCached(s, dir).variancePerTimestep.orderBy("timestep")
 
   /** dask `argmax` per timestep — the hotspot-location probe. */
   def arrArgmax(s: SparkSession, dir: String): DataFrame =
-    eventsArray1dCached(s, dir).argmaxRows().transform(Present.fused("timestep"))
+    eventsArray1dCached(s, dir).argmaxRows().orderBy("timestep")
 
   /** dask N-d `argmax` — the rank-generic hotspot probe on the 2-d
     * array: the per-timestep max cell's (user, hour) coordinates, ties
@@ -247,11 +247,11 @@ object ArrayQueries {
   def arrArgmax2d(s: SparkSession, dir: String): DataFrame =
     eventsArray2dCached(s, dir).argmaxNd()
       .withColumnsRenamed(Map("i0" -> "i", "i1" -> "j"))
-      .transform(Present.fused("timestep"))
+      .orderBy("timestep")
 
   /** dask-style one-pass stats per timestep. */
   def arrStatsTs(s: SparkSession, dir: String): DataFrame =
-    eventsArray1dCached(s, dir).statsPerTimestep.transform(Present.fused("timestep"))
+    eventsArray1dCached(s, dir).statsPerTimestep.orderBy("timestep")
 
   /** doreisa two-array elementwise `(a - b)` + mean (docs/analytics.md:31).
     * Both parity arrays come from the ONE-scan [[parityCells]] relation
@@ -261,24 +261,24 @@ object ArrayQueries {
     val b = parityArray(s, dir, even = false)
     a.zipWith(b)(_ - _).sumPerTimestep("total")
       .select(col("timestep"), (col("total") / lit(64.0)).as("mean_diff"))
-      .transform(Present.fused("timestep"))
+      .orderBy("timestep")
   }
 
   /** doreisa preprocess `10 * chunk` then reduce (tests/test_preprocessing_callback.py:24). */
   def arrPreprocessSum(s: SparkSession, dir: String): DataFrame =
-    eventsArray1dCached(s, dir).mapValues(_ * lit(10.0)).sumPerTimestep("total").transform(Present.fused("timestep"))
+    eventsArray1dCached(s, dir).mapValues(_ * lit(10.0)).sumPerTimestep("total").orderBy("timestep")
 
   /** Fused elementwise chain `2x + 1` then reduce (dask elementwise). */
   def arrElementwiseChain(s: SparkSession, dir: String): DataFrame =
     eventsArray1dCached(s, dir).mapValues(x => x * lit(2.0) + lit(1.0))
-      .sumPerTimestep("total").transform(Present.fused("timestep"))
+      .sumPerTimestep("total").orderBy("timestep")
 
   /** doreisa sliding window w=2: `(arr(t) - arr(t-1)).sum()`
     * (tests/test_sliding_window.py:22-27). */
   def arrWindowDelta(s: SparkSession, dir: String): DataFrame = {
     val cur = eventsArray1dCached(s, dir)
     val prev = cur.shiftTimestep(1L)
-    cur.zipWith(prev)(_ - _).sumPerTimestep("delta").transform(Present.fused("timestep"))
+    cur.zipWith(prev)(_ - _).sumPerTimestep("delta").orderBy("timestep")
   }
 
   /** dask `arr.T` then `sum(axis=1)`: the transpose is a narrow
@@ -287,7 +287,7 @@ object ArrayQueries {
     * per `h` instead of the other way around. */
   def arrTransposeSum(s: SparkSession, dir: String): DataFrame =
     eventsArray2dCached(s, dir).transpose2d().axisSumRows(axis = 1)
-      .transform(Present.fused("timestep", "idx"))
+      .orderBy("timestep", "idx")
 
   /** The numpy axis-manipulation naming chain (`expand_dims` →
     * `swapaxes` → `moveaxis` → `squeeze`, VERDICT r19 missing #4):
@@ -300,7 +300,7 @@ object ArrayQueries {
     eventsArray2dCached(s, dir)
       .expandDims(2).swapaxes(0, 1).moveaxis(2, 1).squeeze(Seq(1))
       .axisSumRows(axis = 1)
-      .transform(Present.fused("timestep", "idx"))
+      .orderBy("timestep", "idx")
 
   /** dask `concatenate([a, b], axis=0)` then stats: the even-event and
     * odd-event arrays stack into one 128-wide array by shifting b's
@@ -309,12 +309,12 @@ object ArrayQueries {
   def arrConcatStats(s: SparkSession, dir: String): DataFrame = {
     val a = parityArray(s, dir, even = true)
     val b = parityArray(s, dir, even = false)
-    a.concatenate(b, axis = 0).statsPerTimestep.transform(Present.fused("timestep"))
+    a.concatenate(b, axis = 0).statsPerTimestep.orderBy("timestep")
   }
 
   /** dask `arr.sum(axis=1)` on the 2-d array. */
   def arrAxisSum(s: SparkSession, dir: String): DataFrame =
-    eventsArray2dCached(s, dir).axisSumRows(axis = 1).transform(Present.fused("timestep", "idx"))
+    eventsArray2dCached(s, dir).axisSumRows(axis = 1).orderBy("timestep", "idx")
 
   /** dask `arr.max(axis=1)` on the 2-d array — the generic
     * [[graft.arrays.ChunkedArray.axisReduce]] under `greatest`: per-user
@@ -323,7 +323,7 @@ object ArrayQueries {
   def arrAxisMax(s: SparkSession, dir: String): DataFrame =
     eventsArray2dCached(s, dir).axisMax(axis = 1).rowsNd
       .withColumnsRenamed(Map("i0" -> "idx"))
-      .transform(Present.fused("timestep", "idx"))
+      .orderBy("timestep", "idx")
 
   /** dask `da.ptp(axis=1)` (peak-to-peak): per-row dynamic range of
     * the 2-d array — operator ALGEBRA again: axisMax zipped with
@@ -334,7 +334,7 @@ object ArrayQueries {
     val a = eventsArray2dCached(s, dir)
     a.axisMax(axis = 1).zipWith(a.axisMin(axis = 1))(_ - _).rowsNd
       .withColumnsRenamed(Map("i0" -> "idx"))
-      .transform(Present.fused("timestep", "idx"))
+      .orderBy("timestep", "idx")
   }
 
   /** dask `arr.mean(axis=1)` on the 2-d array: decimal-exact axis sum,
@@ -342,7 +342,7 @@ object ArrayQueries {
   def arrAxisMean(s: SparkSession, dir: String): DataFrame =
     eventsArray2dCached(s, dir).axisMean(axis = 1).rowsNd
       .withColumnsRenamed(Map("i0" -> "idx"))
-      .transform(Present.fused("timestep", "idx"))
+      .orderBy("timestep", "idx")
 
   /** dask `arr.sum(axis=1)` on the RANK-3 array — the rank-generic
     * axisSum driven through a middle axis: reducing the hour axis of
@@ -351,7 +351,7 @@ object ArrayQueries {
   def arrAxisSum3d(s: SparkSession, dir: String): DataFrame =
     eventsArray3dCached(s, dir).axisSum(axis = 1).rowsNd
       .withColumnsRenamed(Map("i0" -> "i", "i1" -> "j"))
-      .transform(Present.fused("timestep", "i", "j"))
+      .orderBy("timestep", "i", "j")
 
   /** dask `arr.var(axis=1)` on the RANK-3 array — the axis-wise variance
     * through the two-moment decimal partial blocks: reducing the hour
@@ -360,7 +360,7 @@ object ArrayQueries {
   def arrAxisVar(s: SparkSession, dir: String): DataFrame =
     eventsArray3dCached(s, dir).axisVar(axis = 1).rowsNd
       .withColumnsRenamed(Map("i0" -> "i", "i1" -> "j"))
-      .transform(Present.fused("timestep", "i", "j"))
+      .orderBy("timestep", "i", "j")
 
   /** dask `arr.std(axis=1)` on the 2-d array: one IEEE-correctly-rounded
     * sqrt over the exact-operand axis variance, so it gates cross-engine
@@ -368,7 +368,7 @@ object ArrayQueries {
   def arrAxisStd(s: SparkSession, dir: String): DataFrame =
     eventsArray2dCached(s, dir).axisStd(axis = 1).rowsNd
       .withColumnsRenamed(Map("i0" -> "idx"))
-      .transform(Present.fused("timestep", "idx"))
+      .orderBy("timestep", "idx")
 
   /** dask `arr.argmax(axis=1)` on the 2-d array: per user, the hour of
     * the daily maximum (ties to the lowest hour) — the axis-wise
@@ -376,30 +376,30 @@ object ArrayQueries {
   def arrArgmaxAxis(s: SparkSession, dir: String): DataFrame =
     eventsArray2dCached(s, dir).axisArgmax(axis = 1).rowsNd
       .withColumnsRenamed(Map("i0" -> "idx"))
-      .transform(Present.fused("timestep", "idx"))
+      .orderBy("timestep", "idx")
 
   /** dask `a[a > t].sum()` — the in-situ threshold-then-reduce probe:
     * cells above 500 only, count + exact sum per timestep, mask applied
     * chunk-locally. */
   def arrMaskedSum(s: SparkSession, dir: String): DataFrame =
     eventsArray1dCached(s, dir).maskedSumPerTimestep(_ > lit(500.0))
-      .transform(Present.fused("timestep"))
+      .orderBy("timestep")
 
   /** dask `cumsum(axis=0)` on the 2-d array — the per-axis distributed
     * scan: native chunk-local line prefixes plus a carry window keyed
     * on the non-scanned dims. */
   def arrCumsum2d(s: SparkSession, dir: String): DataFrame =
     eventsArray2dCached(s, dir).cumsumAxis(axis = 0).rows2d
-      .transform(Present.fused("timestep", "i", "j"))
+      .orderBy("timestep", "i", "j")
 
   /** dask slicing `arr[2:6, 1:7].sum()` with chunk pruning. */
   def arrSliceSum(s: SparkSession, dir: String): DataFrame =
-    eventsArray2dCached(s, dir).slice2d(2, 6, 1, 7).sumPerTimestep("total").transform(Present.fused("timestep"))
+    eventsArray2dCached(s, dir).slice2d(2, 6, 1, 7).sumPerTimestep("total").orderBy("timestep")
 
   /** 5-point Laplacian via halo exchange, then a per-timestep reduction —
     * the in-situ "derivative of the simulation field" analytic. */
   def arrStencilSum(s: SparkSession, dir: String): DataFrame =
-    eventsArray2dCached(s, dir).stencilLaplacian().sumPerTimestep("total").transform(Present.fused("timestep"))
+    eventsArray2dCached(s, dir).stencilLaplacian().sumPerTimestep("total").orderBy("timestep")
 
   /** dask `da.coarsen(np.sum, arr, {0: 2, 1: 2})` — block-reduction
     * downsampling of the 8x8 field to 4x4 (the "thumbnail the
@@ -408,7 +408,7 @@ object ArrayQueries {
     * the cached chunk relation — payloads shrink 4x in place. */
   def arrCoarsen(s: SparkSession, dir: String): DataFrame =
     eventsArray2dCached(s, dir).coarsen(Seq(2, 2), "sum").rows2d
-      .transform(Present.fused("timestep", "i", "j"))
+      .orderBy("timestep", "i", "j")
 
   /** dask `A.T @ A` over the WHOLE timestep-stacked array — the
     * distributed half of tall-skinny SVD/PCA (`da.linalg.svd` runs
@@ -425,7 +425,7 @@ object ArrayQueries {
     Artifacts.persist(eventsArray2dCached(s, dir).gramRows())
 
   def arrGram(s: SparkSession, dir: String): DataFrame =
-    gramRel(s, dir).transform(Present.fused("i", "j"))
+    gramRel(s, dir).orderBy("i", "j")
 
   /** dask `da.linalg.svd(A)[1]` — the singular spectrum of the
     * timestep-stacked field: sigma_i = sqrt(eig_i(AᵀA)). The distributed
@@ -439,7 +439,7 @@ object ArrayQueries {
       graft.arrays.Eigen.singularValuesFromGram(gramMatrix(s, dir)))
     import s.implicits._
     sv.zipWithIndex.map { case (v, k) => (k.toLong, v) }
-      .toDF("k", "sigma").transform(Present.fused("k"))
+      .toDF("k", "sigma").orderBy("k")
   }
 
   /** How many principal components [[arrPcaProject]] keeps. */
@@ -478,7 +478,7 @@ object ArrayQueries {
           element_at(varr, e.getField("j").cast("int") + 1)).as(s"$prefix$k")
     }
     byRow.select(col("timestep") +: col("i") +: projCols: _*)
-      .transform(Present.fused("timestep", "i"))
+      .orderBy("timestep", "i")
   }
 
   /** How many left singular modes [[arrSvdModes]] emits. */
@@ -542,7 +542,7 @@ object ArrayQueries {
       val den = deni * denj
       (i.toLong, j.toLong, if (den == 0.0) None else Some(num / den))
     }
-    rows.toDF("i", "j", "corr").transform(Present.fused("i", "j"))
+    rows.toDF("i", "j", "corr").orderBy("i", "j")
   }
 
   /** dask `da.cov(A, rowvar=False)` — the C×C SAMPLE covariance matrix
@@ -566,7 +566,7 @@ object ArrayQueries {
     import s.implicits._
     val rows = for (i <- 0 until c; j <- 0 until c) yield
       (i.toLong, j.toLong, (nD * g(i)(j) - cs(i) * cs(j)) / (nD * (nD - 1.0)))
-    rows.toDF("i", "j", "cov").transform(Present.fused("i", "j"))
+    rows.toDF("i", "j", "cov").orderBy("i", "j")
   }
 
   /** dask `da.linalg.qr(A)[1]` — the R factor of the thin QR of the
@@ -584,7 +584,7 @@ object ArrayQueries {
       graft.arrays.Eigen.cholUpper(gramMatrix(s, dir)))
     import s.implicits._
     (for (i <- 0 until n; j <- i until n) yield (i.toLong, j.toLong, ru(i)(j)))
-      .toDF("i", "j", "r_val").transform(Present.fused("i", "j"))
+      .toDF("i", "j", "r_val").orderBy("i", "j")
   }
 
   /** The fitted least-squares artifact of [[arrLstsq]]: slopes over
@@ -662,7 +662,7 @@ object ArrayQueries {
     import s.implicits._
     (f.beta.zipWithIndex.map { case (b, j) => (s"x$j", b) } :+
       (("intercept", f.icept)) :+ (("rss", f.rss)) :+ (("r2", f.r2)))
-      .toDF("term", "value").transform(Present.fused("term"))
+      .toDF("term", "value").orderBy("term")
   }
 
   /** Residual diagnostics of the [[arrLstsq]] fit, served DISTRIBUTED
@@ -692,14 +692,14 @@ object ArrayQueries {
       .agg(count(lit(1)).as("n_rows"), sum(col("qe")).as("sse_q"))
       .select(col("timestep"), col("n_rows"), col("sse_q"),
         (col("sse_q").cast("double") / lit(1e6)).as("sse"))
-      .transform(Present.fused("timestep"))
+      .orderBy("timestep")
   }
 
   /** Distributed block matmul `A @ A` on the 8x8 array (dask linear
     * algebra), flattened to (timestep, i, j, value) rows. */
   def arrMatmul(s: SparkSession, dir: String): DataFrame = {
     val a = eventsArray2dCached(s, dir)
-    a.matmul(a).rows2d.transform(Present.fused("timestep", "i", "j"))
+    a.matmul(a).rows2d.orderBy("timestep", "i", "j")
   }
 
   /** Rank-3 x rank-2 contraction `tensordot(A3, A2, axes=1)` (dask
@@ -711,7 +711,7 @@ object ArrayQueries {
     val b = eventsArray2dCached(s, dir)
     a.tensordot(b).rowsNd
       .withColumnsRenamed(Map("i0" -> "i", "i1" -> "j", "i2" -> "k"))
-      .transform(Present.fused("timestep", "i", "j", "k"))
+      .orderBy("timestep", "i", "j", "k")
   }
 
   /** Arbitrary-axis-list contraction `tensordot(A3, A2,
@@ -725,7 +725,7 @@ object ArrayQueries {
     val b = eventsArray2dCached(s, dir)
     a.tensordot(b, Seq(0, 2), Seq(1, 0)).rowsNd
       .withColumnsRenamed(Map("i0" -> "i"))
-      .transform(Present.fused("timestep", "i"))
+      .orderBy("timestep", "i")
   }
 
   /** dask `da.einsum("uh,vh->vu", a, a)` — the einsum string front-end
@@ -740,7 +740,7 @@ object ArrayQueries {
     val a = eventsArray2dCached(s, dir)
     ChunkedArray.einsum("uh,vh->vu", a, a).rowsNd
       .withColumnsRenamed(Map("i0" -> "i", "i1" -> "j"))
-      .transform(Present.fused("timestep", "i", "j"))
+      .orderBy("timestep", "i", "j")
   }
 
   /** dask `da.einsum("uu->u", a)` — the repeated-subscript DIAGONAL
@@ -755,7 +755,7 @@ object ArrayQueries {
     val a = eventsArray2dCached(s, dir)
     ChunkedArray.einsum("uu->u", a).rowsNd
       .withColumnsRenamed(Map("i0" -> "i"))
-      .transform(Present.fused("timestep", "i"))
+      .orderBy("timestep", "i")
   }
 
   /** dask `da.einsum("uhw,uwx->uhx", a, a)` — the BATCH form (the
@@ -770,7 +770,7 @@ object ArrayQueries {
     val a = eventsArray3dCached(s, dir)
     ChunkedArray.einsum("uhw,uwx->uhx", a, a).rowsNd
       .withColumnsRenamed(Map("i0" -> "i", "i1" -> "j", "i2" -> "k"))
-      .transform(Present.fused("timestep", "i", "j", "k"))
+      .orderBy("timestep", "i", "j", "k")
   }
 
   /** dask `da.einsum("uh,vh,vw->uw", a, m, a)` — the N-OPERAND einsum
@@ -799,7 +799,7 @@ object ArrayQueries {
     val m = a.mapValues(x => when(x > lit(100.0), lit(1.0)).otherwise(lit(0.0)))
     ChunkedArray.einsum("uh,vh,vw->uw", Seq(a, m, a)).rowsNd
       .withColumnsRenamed(Map("i0" -> "i", "i1" -> "j"))
-      .transform(Present.fused("timestep", "i", "j"))
+      .orderBy("timestep", "i", "j")
   }
 
   /** numpy `trace` / einsum `"ii->"` composed from the engine's own
@@ -813,7 +813,7 @@ object ArrayQueries {
   def arrTrace(s: SparkSession, dir: String): DataFrame =
     ChunkedArray.einsum("uu->u", eventsArray2dCached(s, dir))
       .sumPerTimestep("trace")
-      .transform(Present.fused("timestep"))
+      .orderBy("timestep")
 
   /** dask `da.einsum("u,v->uv", a, a)` / `np.outer` — the OUTER product
     * (tensordot axes=0; the last einsum class the engine refused): the
@@ -833,7 +833,7 @@ object ArrayQueries {
     val cached = o.copy(df = Artifacts.persist(o.df))
     cached.rowsNd
       .withColumnsRenamed(Map("i0" -> "i", "i1" -> "j"))
-      .transform(Present.fused("timestep", "i", "j"))
+      .orderBy("timestep", "i", "j")
   }
 
   /** dask `reshape` — the 8x8 2-d array re-read as a 1-d 64-vector in
@@ -842,7 +842,7 @@ object ArrayQueries {
     * wrong offset) shifts every later prefix and breaks the hash. */
   def arrReshapeFlat(s: SparkSession, dir: String): DataFrame =
     eventsArray2dCached(s, dir).reshape(Seq(64), Seq(16)).cumsumRows()
-      .transform(Present.fused("timestep", "idx"))
+      .orderBy("timestep", "idx")
 
   /** dask `stack([a, 2a])` — a NEW leading axis over two same-geometry
     * arrays (pure metadata, no payload moves), then the per-slab totals
@@ -854,14 +854,14 @@ object ArrayQueries {
     ChunkedArray.stack(Seq(a, a.mapValues(_ * lit(2.0))))
       .axisSum(2).axisSum(1).rowsNd
       .withColumnsRenamed(Map("i0" -> "idx"))
-      .transform(Present.fused("timestep", "idx"))
+      .orderBy("timestep", "idx")
   }
 
   /** dask `a.any()` / `a.all()` per timestep (truthiness: nonzero) in
     * one pass — "did ANY bucket see traffic / did EVERY bucket" — two
     * 0/1 scalars per chunk cross the wire. */
   def arrAnyAll(s: SparkSession, dir: String): DataFrame =
-    eventsArray1dCached(s, dir).truthPerTimestep.transform(Present.fused("timestep"))
+    eventsArray1dCached(s, dir).truthPerTimestep.orderBy("timestep")
 
   /** dask `prod(axis=)` on the 2-d array: cells first collapse to small
     * integers 1..7 (chunk-local), so every 8-long line product stays
@@ -872,7 +872,7 @@ object ArrayQueries {
       .mapValues(x => pmod(floor(x).cast("bigint"), lit(7)) + lit(1))
       .axisProd(axis = 1).rowsNd
       .withColumnsRenamed(Map("i0" -> "idx"))
-      .transform(Present.fused("timestep", "idx"))
+      .orderBy("timestep", "idx")
 
   /** Generalized stencil (dask `map_overlap(depth=1, boundary='reflect')`)
     * — a 3-point (0.25, 0.5, 0.25) smoothing kernel along the 1-d array
@@ -883,7 +883,7 @@ object ArrayQueries {
       .stencilAxis(axis = 0, weights = Seq(0.25, 0.5, 0.25), boundary = "reflect")
       .rowsNd
       .withColumnsRenamed(Map("i0" -> "idx"))
-      .transform(Present.fused("timestep", "idx"))
+      .orderBy("timestep", "idx")
 
   /** numpy/dask `gradient(arr)` along the 1-d array — central
     * differences `(f[x+1] - f[x-1])/2` with numpy's one-sided edges,
@@ -893,7 +893,7 @@ object ArrayQueries {
   def arrGradient(s: SparkSession, dir: String): DataFrame =
     eventsArray1dCached(s, dir).gradientAxis(axis = 0).rowsNd
       .withColumnsRenamed(Map("i0" -> "idx"))
-      .transform(Present.fused("timestep", "idx"))
+      .orderBy("timestep", "idx")
 
   /** Elementwise zip across MISMATCHED chunkings (dask auto-rechunks,
     * `unify_chunks`): the same logical array chunked 4x16 and 8x8 zips
@@ -905,7 +905,7 @@ object ArrayQueries {
     val a = eventsArray1dCached(s, dir)
     a.zipWithAuto(a.rechunk(Seq(8)))(_ + _)
       .maskedSumPerTimestep(_ > lit(1000.0))
-      .transform(Present.fused("timestep"))
+      .orderBy("timestep")
   }
 
   /** dask `da.topk(5)` per timestep — the k hottest buckets with their
@@ -913,7 +913,7 @@ object ArrayQueries {
     * its own 5 best (value, index) structs, the per-timestep merge keeps
     * 5 — the bounded-heap posture at the array face. */
   def arrTopk(s: SparkSession, dir: String): DataFrame =
-    eventsArray1dCached(s, dir).topkRows(5).transform(Present.fused("timestep", "rank"))
+    eventsArray1dCached(s, dir).topkRows(5).orderBy("timestep", "rank")
 
   /** dask `da.percentile` (exact, percentile_disc semantics) per
     * timestep — p25/p50/p90 of the 64 dense cells through ONE
@@ -922,7 +922,7 @@ object ArrayQueries {
   def arrQuantile(s: SparkSession, dir: String): DataFrame =
     eventsArray1dCached(s, dir)
       .quantilesPerTimestep(Seq(("p25", 0.25), ("p50", 0.50), ("p90", 0.90)))
-      .transform(Present.fused("timestep"))
+      .orderBy("timestep")
 
   /** dask `da.percentile` DEFAULT (linear interpolation) per timestep —
     * the interpolated twin of [[arrQuantile]], closing the last semantic
@@ -935,7 +935,7 @@ object ArrayQueries {
   def arrQuantileCont(s: SparkSession, dir: String): DataFrame =
     eventsArray1dCached(s, dir)
       .quantileContPerTimestep(Seq(("p25", 0.25), ("p50", 0.50), ("p90", 0.90)))
-      .transform(Present.fused("timestep"))
+      .orderBy("timestep")
 
   /** dask `map_overlap` with a FULL 3x3 kernel (binomial blur, all
     * power-of-two weights so every product is IEEE-exact) over the 2-d
@@ -953,7 +953,7 @@ object ArrayQueries {
         Seq(0.0625, 0.125, 0.0625)), boundary = "reflect")
       .rowsNd
       .select(col("timestep"), col("i0").as("i"), col("i1").as("j"), col("value"))
-      .transform(Present.fused("timestep", "i", "j"))
+      .orderBy("timestep", "i", "j")
 
   /** Rank-3 FULL 3×3×3 stencil (separable binomial (1,2,1)⊗³ / 64, all
     * power-of-two weights) with reflect boundary — the full-hypercube
@@ -969,7 +969,7 @@ object ArrayQueries {
       .rowsNd
       .select(col("timestep"), col("i0").as("i"), col("i1").as("j"),
         col("i2").as("k"), col("value"))
-      .transform(Present.fused("timestep", "i", "j", "k"))
+      .orderBy("timestep", "i", "j", "k")
   }
 
   /** dask `da.flip` emitted cell-exact: a pure narrow projection
@@ -978,7 +978,7 @@ object ArrayQueries {
   def arrFlip(s: SparkSession, dir: String): DataFrame =
     eventsArray1dCached(s, dir).flip(0).rowsNd
       .select(col("timestep"), col("i0").as("idx"), col("value"))
-      .transform(Present.fused("timestep", "idx"))
+      .orderBy("timestep", "idx")
 
   /** dask `da.roll` (circular shift by 5, deliberately NOT a chunk
     * multiple) emitted cell-exact: payloads move as two slab rows per
@@ -986,7 +986,7 @@ object ArrayQueries {
   def arrRoll(s: SparkSession, dir: String): DataFrame =
     eventsArray1dCached(s, dir).roll(0, 5).rowsNd
       .select(col("timestep"), col("i0").as("idx"), col("value"))
-      .transform(Present.fused("timestep", "idx"))
+      .orderBy("timestep", "idx")
 
   /** dask `da.pad(mode='constant')` (8 cells each side, value -1.0 so
     * the fill is distinguishable from the zero-filled interior) emitted
@@ -995,7 +995,7 @@ object ArrayQueries {
   def arrPad(s: SparkSession, dir: String): DataFrame =
     eventsArray1dCached(s, dir).pad(0, 8, 8, -1.0).rowsNd
       .select(col("timestep"), col("i0").as("idx"), col("value"))
-      .transform(Present.fused("timestep", "idx"))
+      .orderBy("timestep", "idx")
 
   /** dask `da.pad(mode='edge')` — the same 8-cell pad with the
     * boundary plane REPLICATED instead of a constant: the seed
@@ -1005,7 +1005,7 @@ object ArrayQueries {
   def arrPadEdge(s: SparkSession, dir: String): DataFrame =
     eventsArray1dCached(s, dir).pad(0, 8, 8, mode = "edge").rowsNd
       .select(col("timestep"), col("i0").as("idx"), col("value"))
-      .transform(Present.fused("timestep", "idx"))
+      .orderBy("timestep", "idx")
 
   /** dask `da.clip(100, 900)` then stats — the clip face proven
     * through the reduction oracle: a pure narrow [[ChunkedArray.mapValues]]
@@ -1014,14 +1014,14 @@ object ArrayQueries {
   def arrClip(s: SparkSession, dir: String): DataFrame =
     eventsArray1dCached(s, dir)
       .mapValues(x => least(greatest(x, lit(100.0)), lit(900.0)))
-      .statsPerTimestep.transform(Present.fused("timestep"))
+      .statsPerTimestep.orderBy("timestep")
 
   /** dask `da.unique(return_counts=True)` per timestep — the exact
     * value-multiplicity relation (which the quantile face's histogram
     * also rides): one partial-agg pass, shuffle O(distinct values). */
   def arrUnique(s: SparkSession, dir: String): DataFrame =
     eventsArray1dCached(s, dir).valueCountsPerTimestep
-      .transform(Present.fused("timestep", "value"))
+      .orderBy("timestep", "value")
 
   /** dask `da.diff` — first discrete difference along the array
     * (out[i] = in[i+1] - in[i], 63 rows per timestep): operator
@@ -1034,7 +1034,7 @@ object ArrayQueries {
     a.roll(0, -1).zipWith(a)(_ - _).rowsNd
       .select(col("timestep"), col("i0").as("idx"), col("value"))
       .where(col("idx") < geom1d.dimSize(0) - 1)
-      .transform(Present.fused("timestep", "idx"))
+      .orderBy("timestep", "idx")
   }
 
   /** dask `da.nansum` / `da.nanmean` / `da.nanmin` / `da.nanmax` /
@@ -1049,7 +1049,7 @@ object ArrayQueries {
     eventsArray1dCached(s, dir)
       .where(_ =!= 0.0, lit(null))
       .nanStatsPerTimestep
-      .transform(Present.fused("timestep"))
+      .orderBy("timestep")
 
   /** dask `da.corrcoef` between the array and its lag-1 roll — the
     * per-timestep serial correlation of the bucket loads ("is today's
@@ -1060,7 +1060,7 @@ object ArrayQueries {
     * formula replays the q_corr oracle operand-for-operand. */
   def arrCorrRoll(s: SparkSession, dir: String): DataFrame = {
     val a = eventsArray1dCached(s, dir)
-    a.corrPerTimestep(a.roll(0, 1), alias = "corr_lag1").transform(Present.fused("timestep"))
+    a.corrPerTimestep(a.roll(0, 1), alias = "corr_lag1").orderBy("timestep")
   }
 
   /** Deliberately unsorted, duplicate-bearing gather list: order and
@@ -1075,7 +1075,7 @@ object ArrayQueries {
     * narrow projection, zero shuffles before the presentation sort. */
   def arrTake(s: SparkSession, dir: String): DataFrame =
     eventsArray1dCached(s, dir).takeRows(takeIndices)
-      .transform(Present.fused("timestep", "sel"))
+      .orderBy("timestep", "sel")
 
   /** dask `da.median(axis=1)` — per-ROW exact median of the 2-d array
     * (the row-distribution profile the global quantile face can't
@@ -1087,7 +1087,7 @@ object ArrayQueries {
   def arrAxisMedian(s: SparkSession, dir: String): DataFrame =
     eventsArray2dCached(s, dir)
       .axisQuantileRows(axis = 1, Seq(("med", 0.5), ("p90", 0.9)))
-      .transform(Present.fused("timestep", "idx"))
+      .orderBy("timestep", "idx")
 
   /** dask `da.percentile` per ROW with the DEFAULT linear interpolation
     * — [[arrAxisMedian]]'s method="linear" twin
@@ -1096,7 +1096,7 @@ object ArrayQueries {
   def arrAxisQuantileCont(s: SparkSession, dir: String): DataFrame =
     eventsArray2dCached(s, dir)
       .axisQuantileContRows(axis = 1, Seq(("med", 0.5), ("p90", 0.9)))
-      .transform(Present.fused("timestep", "idx"))
+      .orderBy("timestep", "idx")
 
   /** dask `da.average(a, weights=w)` — per-timestep weighted mean
     * against an aligned weights array (here the array's own clipped
@@ -1107,7 +1107,7 @@ object ArrayQueries {
   def arrWeightedMean(s: SparkSession, dir: String): DataFrame = {
     val a = eventsArray1dCached(s, dir)
     val w = a.mapValues(x => least(greatest(x, lit(100.0)), lit(900.0)))
-    a.weightedMeanPerTimestep(w).transform(Present.fused("timestep"))
+    a.weightedMeanPerTimestep(w).orderBy("timestep")
   }
 
   /** dask `cumprod(axis=1)` on the 2-d array — [[graft.arrays.ChunkedArray.cumprodAxis]],
@@ -1120,7 +1120,7 @@ object ArrayQueries {
     eventsArray2dCached(s, dir)
       .mapValues(x => pmod(floor(x).cast("bigint"), lit(7)) + lit(1))
       .cumprodAxis(axis = 1).rows2d
-      .transform(Present.fused("timestep", "i", "j"))
+      .orderBy("timestep", "i", "j")
 
   /** dask/numpy `sort(a, axis=1)` — per-line full sort along the hour
     * axis ([[graft.arrays.ChunkedArray.sortAxisRows]]): a full sort is
@@ -1132,7 +1132,7 @@ object ArrayQueries {
   def arrSortAxis(s: SparkSession, dir: String): DataFrame =
     eventsArray2dCached(s, dir).sortAxisRows(axis = 1)
       .withColumnsRenamed(Map("i0" -> "i", "i1" -> "j"))
-      .transform(Present.fused("timestep", "i", "j"))
+      .orderBy("timestep", "i", "j")
 
   /** numpy `argsort(a, axis=1)` (stable) — [[arrSortAxis]]'s index
     * face ([[graft.arrays.ChunkedArray.argsortAxisRows]]): rank k of a
@@ -1142,7 +1142,7 @@ object ArrayQueries {
   def arrArgsort(s: SparkSession, dir: String): DataFrame =
     eventsArray2dCached(s, dir).argsortAxisRows(axis = 1)
       .withColumnsRenamed(Map("i0" -> "i", "i1" -> "j"))
-      .transform(Present.fused("timestep", "i", "j"))
+      .orderBy("timestep", "i", "j")
 
   /** numpy/dask `broadcast_to(a, (4,) + a.shape)` — a new leading axis
     * by pure NARROW replication ([[graft.arrays.ChunkedArray.broadcastTo]],
@@ -1155,7 +1155,7 @@ object ArrayQueries {
       .groupBy(col("timestep"), col("i0").as("lead"))
       .agg(sum(dec2(col("value"))).cast("double").as("total"),
         sum(dec2(col("value")) * (col("i1") + lit(1L))).cast("double").as("wsum"))
-      .transform(Present.fused("timestep", "lead"))
+      .orderBy("timestep", "lead")
 
   /** numpy/dask `tile(a, 2)` along the existing axis — pure metadata
     * re-addressing ([[graft.arrays.ChunkedArray.tileAxis]]: copy r's
@@ -1167,7 +1167,7 @@ object ArrayQueries {
       .groupBy("timestep")
       .agg(count(lit(1)).as("n_cells"),
         sum(dec2(col("value")) * (col("i0") + lit(1L))).cast("double").as("wsum"))
-      .transform(Present.fused("timestep"))
+      .orderBy("timestep")
 
   /** numpy/dask `repeat(a, 3)` — each ELEMENT repeated 3× in place
     * ([[graft.arrays.ChunkedArray.repeatAxis]]: the chunk's axis extent
@@ -1180,7 +1180,7 @@ object ArrayQueries {
       .groupBy("timestep")
       .agg(count(lit(1)).as("n_cells"),
         sum(dec2(col("value")) * (col("i0") + lit(1L))).cast("double").as("wsum"))
-      .transform(Present.fused("timestep"))
+      .orderBy("timestep")
 
   /** The NON-power-of-two DFT (numpy/dask `fft` at arbitrary n — the
     * restriction [[arrFft]] declared, retired): the 48-cell daily
@@ -1191,7 +1191,7 @@ object ArrayQueries {
     * the oracle, which replays the whole
     * chirp→fft→·B→ifft→chirp chain stage-for-stage, bit-exact). */
   def arrFftNp2(s: SparkSession, dir: String): DataFrame =
-    eventsArray48Cached(s, dir).bluesteinRows().transform(Present.fused("timestep", "u"))
+    eventsArray48Cached(s, dir).bluesteinRows().orderBy("timestep", "u")
 
   /** One-sided power spectrum of the NON-power-of-two field — bins
     * 0..n/2 of [[arrFftNp2]] with `power = re·re + im·im` spelled
@@ -1202,7 +1202,7 @@ object ArrayQueries {
       .filter(col("u") <= geom48.dimSize(0) / 2)
       .select(col("timestep"), col("u"),
         (col("re") * col("re") + col("im") * col("im")).as("power"))
-      .transform(Present.fused("timestep", "u"))
+      .orderBy("timestep", "u")
 
   /** dask `da.fft.fft` of each timestep's field line (the spectral
     * analytic the in-situ `arr_gradient`/`arr_stencil_*` analyst plots
@@ -1214,34 +1214,34 @@ object ArrayQueries {
     * butterfly order per element, so doubles match bit-for-bit (no
     * transcendental ever crosses engines, SURVEY §5). */
   def arrFft(s: SparkSession, dir: String): DataFrame =
-    eventsArray1dCached(s, dir).fftRows().transform(Present.fused("timestep", "u"))
+    eventsArray1dCached(s, dir).fftRows().orderBy("timestep", "u")
 
   /** One-sided power spectrum `|fft|²` per timestep — bins 0..n/2 of
     * [[arrFft]] with `power = re·re + im·im` spelled operand-for-
     * operand with the oracle
     * ([[graft.arrays.ChunkedArray.powerSpectrumRows]]). */
   def arrSpectrum(s: SparkSession, dir: String): DataFrame =
-    eventsArray1dCached(s, dir).powerSpectrumRows().transform(Present.fused("timestep", "u"))
+    eventsArray1dCached(s, dir).powerSpectrumRows().orderBy("timestep", "u")
 
   /** numpy `rfft` + `rfftfreq` — the packed Hermitian half-spectrum of
     * the real daily line ([[graft.arrays.ChunkedArray.rfftRows]]): a
     * pure narrow projection over the same compiled butterfly, freq an
     * exact dyadic u/n. */
   def arrRfft(s: SparkSession, dir: String): DataFrame =
-    eventsArray1dCached(s, dir).rfftRows().transform(Present.fused("timestep", "u"))
+    eventsArray1dCached(s, dir).rfftRows().orderBy("timestep", "u")
 
   /** numpy `fftshift` ordering + shifted `fftfreq` axis
     * ([[graft.arrays.ChunkedArray.fftshiftRows]]): pure index
     * relabeling k = (u + n/2) mod n over the same spectrum. */
   def arrFftshift(s: SparkSession, dir: String): DataFrame =
-    eventsArray1dCached(s, dir).fftshiftRows().transform(Present.fused("timestep", "k"))
+    eventsArray1dCached(s, dir).fftshiftRows().orderBy("timestep", "k")
 
   /** numpy `irfft(rfft(x))` — the packed-real inverse round trip
     * ([[graft.arrays.ChunkedArray.irfftRoundtripRows]]): Hermitian
     * mirror of the PACKED bins, conj-trick inverse on the shared
     * butterfly, real part only; residuals hash-gated bit-for-bit. */
   def arrIrfft(s: SparkSession, dir: String): DataFrame =
-    eventsArray1dCached(s, dir).irfftRoundtripRows().transform(Present.fused("timestep", "i"))
+    eventsArray1dCached(s, dir).irfftRoundtripRows().orderBy("timestep", "i")
 
   /** numpy `ifft(fft(x))` — the INVERSE transform as a round trip over
     * the daily field line ([[graft.arrays.ChunkedArray.ifftRoundtripRows]]):
@@ -1252,7 +1252,7 @@ object ArrayQueries {
     * inverse chain operand-for-operand, so even the 1e-13 imaginary
     * dust matches bit-for-bit. */
   def arrIfft(s: SparkSession, dir: String): DataFrame =
-    eventsArray1dCached(s, dir).ifftRoundtripRows().transform(Present.fused("timestep", "u"))
+    eventsArray1dCached(s, dir).ifftRoundtripRows().orderBy("timestep", "u")
 
   /** The circular smoothing kernel behind [[arrConvFft]]: a symmetric
     * 5-tap low-pass (0.4 center, 0.2 at ±1, 0.1 at ±2), padded to the
@@ -1275,7 +1275,7 @@ object ArrayQueries {
     * against a DIRECT circular convolution (different algorithm, same
     * answer to 1e-9 — the convolution-theorem identity itself). */
   def arrConvFft(s: SparkSession, dir: String): DataFrame =
-    eventsArray1dCached(s, dir).convolveFftRows(ConvKernel).transform(Present.fused("timestep", "u"))
+    eventsArray1dCached(s, dir).convolveFftRows(ConvKernel).orderBy("timestep", "u")
 
   /** Averaged periodogram across timesteps (Bartlett 1948; Welch's
     * method without windowing/overlap — the spectral SUMMARY an
@@ -1298,7 +1298,7 @@ object ArrayQueries {
       .select(col("u"), col("n_ts"), col("psd_q"),
         (col("psd_q").cast("double") / col("n_ts").cast("double") /
           lit(1000.0)).as("psd"))
-      .transform(Present.fused("u"))
+      .orderBy("u")
 
   /** Circular cross-correlation of the EVEN vs ODD parity fields via
     * the correlation theorem ("at what lag does one half of the event
@@ -1313,7 +1313,7 @@ object ArrayQueries {
     parityArray(s, dir, even = true)
       .xcorrFftRows(parityArray(s, dir, even = false))
       .withColumnRenamed("u", "lag")
-      .transform(Present.fused("timestep", "lag"))
+      .orderBy("timestep", "lag")
 
   /** numpy/dask `fft2` of the 2-d field per timestep — the four-step
     * composition [[arrFft]]'s scale caveat declared, shipped as code
@@ -1323,7 +1323,7 @@ object ArrayQueries {
     * oracle replays the identical two passes in the identical
     * composition order, so every (re, im) matches bit-for-bit. */
   def arrFft2(s: SparkSession, dir: String): DataFrame =
-    eventsArray2dCached(s, dir).fft2Rows().transform(Present.fused("timestep", "u", "v"))
+    eventsArray2dCached(s, dir).fft2Rows().orderBy("timestep", "u", "v")
 
   /** numpy `searchsorted` per timestep for a fixed query vector (the
     * in-situ "how many cells sit below each alert threshold" lookup —
@@ -1334,7 +1334,7 @@ object ArrayQueries {
   def arrSearchsorted(s: SparkSession, dir: String): DataFrame =
     eventsArray1dCached(s, dir)
       .searchSortedPerTimestep(SearchThresholds)
-      .transform(Present.fused("timestep", "q"))
+      .orderBy("timestep", "q")
 
   val SearchThresholds: Seq[Double] = Seq(0.5, 50.0, 200.0, 500.0, 2000.0)
 
@@ -1343,7 +1343,7 @@ object ArrayQueries {
     * exact in decimal, the lone double op is the final sqrt — same
     * operand both engines. */
   def arrNorms(s: SparkSession, dir: String): DataFrame =
-    eventsArray1dCached(s, dir).normsPerTimestep().transform(Present.fused("timestep"))
+    eventsArray1dCached(s, dir).normsPerTimestep().orderBy("timestep")
 
   /** The direct 5-tap FIR smoothing filter [[ConvTaps]] in 'valid'
     * mode (numpy `convolve(x, k, 'valid')` — the direct-form companion
@@ -1351,7 +1351,7 @@ object ArrayQueries {
     * [[graft.arrays.ChunkedArray.convolveValidRows]]): exact
     * scaled-integer math end to end, no double crosses engines. */
   def arrConvolve(s: SparkSession, dir: String): DataFrame =
-    eventsArray1dCached(s, dir).convolveValidRows(ConvTaps).transform(Present.fused("timestep", "i"))
+    eventsArray1dCached(s, dir).convolveValidRows(ConvTaps).orderBy("timestep", "i")
 
   /** [[ConvKernel]]'s center taps in hundredths (0.1 0.2 0.4 0.2 0.1). */
   val ConvTaps: Seq[Long] = Seq(10L, 20L, 40L, 20L, 10L)
@@ -1375,7 +1375,7 @@ object ArrayQueries {
         (col("timestep").cast("double") +
           (col("t1") - col("timestep")).cast("double") * lit(0.25)).as("tq"),
         (col("value") + (col("v1") - col("value")) * lit(0.25)).as("vq"))
-      .transform(Present.fused("u", "tq"))
+      .orderBy("u", "tq")
   }
 
   /** numpy `maximum.accumulate` along the hour axis per line (the
@@ -1391,7 +1391,7 @@ object ArrayQueries {
     eventsArray2dCached(s, dir).rows2d
       .withColumn("cummax", max(col("value")).over(w))
       .select(col("timestep"), col("i"), col("j"), col("cummax"))
-      .transform(Present.fused("timestep", "i", "j"))
+      .orderBy("timestep", "i", "j")
   }
 
   /** numpy `histogram2d` of the even/odd parity fields (the joint
@@ -1412,7 +1412,7 @@ object ArrayQueries {
       .groupBy(floor(col("ve") / 100.0).cast("bigint").as("be"),
         floor(col("vo") / 100.0).cast("bigint").as("bo"))
       .agg(count(lit(1)).as("n_cells"))
-      .transform(Present.fused("be", "bo"))
+      .orderBy("be", "bo")
   }
 
   /** numpy-style per-timestep STANDARDIZATION (z-scores — the
@@ -1435,7 +1435,7 @@ object ArrayQueries {
       .select(col("timestep"), col("i0").as("u"),
         when(den > 0.0,
           (col("value") - sv / n) * n / sqrt(den)).as("z"))
-      .transform(Present.fused("timestep", "u"))
+      .orderBy("timestep", "u")
   }
 
   /** Per-cell linear TREND along the time axis (the drift detector an
@@ -1461,7 +1461,7 @@ object ArrayQueries {
     val slope = when(den > 0.0, num / den)
     g.select(col("u"), col("n").as("n_ts"), slope.as("slope"),
         when(den > 0.0, (sv - (num / den) * st) / n).as("icept"))
-      .transform(Present.fused("u"))
+      .orderBy("u")
   }
 
   // ---- oracles (DuckDB SQL replaying the same exact-decimal math) ----

@@ -303,7 +303,7 @@ object Dedup {
       .groupBy("src_a", "src_b")
       .agg(count(lit(1)).as("n_pairs"),
         sum(when(col("jaccard") >= 0.9, 1L).otherwise(0L)).as("n_near_identical"))
-      .transform(Present.fused("src_a", "src_b"))
+      .orderBy("src_a", "src_b")
   }
 
   /** SimHash near-dup pair histogram with GUARANTEED recall at the
@@ -621,7 +621,7 @@ object Dedup {
     Tables.load(s, dir, "documents")
       .join(losers.hint("shuffle_hash"), col("doc_id") === col("v"), "left_anti")
       .groupBy("source").agg(count(lit(1)).as("n_kept"))
-      .transform(Present.fused("source"))
+      .orderBy("source")
   }
 
   /** The (doc_id, line_no, lh, llen) normalized-line relation feeding
@@ -992,7 +992,7 @@ object Dedup {
         sum(col("n_words")).as("total_words"),
         sum(col("rm_words")).as("rm_words"),
         sum(col("kept_words")).as("kept_words"))
-      .transform(Present.fused("source"))
+      .orderBy("source")
 
   private[graft] def simhashHistogram(sigs: DataFrame): DataFrame = {
     val mask = (1L << SimhashBandBits) - 1
@@ -1025,7 +1025,7 @@ object Dedup {
       .select(lit(0L).as("hamming"), expr("g * (g - 1) div 2").as("n"))
     cross.select(col("hamming"), col("n")).union(within)
       .groupBy("hamming").agg(sum(col("n")).as("n_pairs"))
-      .transform(Present.fused("hamming"))
+      .orderBy("hamming")
   }
 
   /** Exact word-trigram Jaccard verification over MinHash-LSH candidate
@@ -1042,7 +1042,7 @@ object Dedup {
       .agg(count(lit(1)).as("n_pairs"),
         sum(when(col("jaccard") >= 0.5, 1L).otherwise(0L)).as("n_close"),
         max(col("jaccard")).as("max_jac"))
-      .transform(Present.fused("source"))
+      .orderBy("source")
 
   /** Probe depth for [[ddEmbedNear]]: every vector probes each bucket
     * within this hamming distance of its own, so near-pairs straddling
@@ -1188,7 +1188,7 @@ object Dedup {
     Tables.load(s, dir, "embeddings").select("vec_id", "label")
       .join(losers.hint("shuffle_hash"), col("vec_id") === col("v"), "left_anti")
       .groupBy("label").agg(count(lit(1)).as("n_kept"))
-      .transform(Present.fused("label"))
+      .orderBy("label")
   }
 
   /** Duplicate-cluster resolution — the step a production dedup pipeline
@@ -1230,7 +1230,7 @@ object Dedup {
     Tables.load(s, dir, "documents")
       .join(losers.hint("shuffle_hash"), col("doc_id") === col("v"), "left_anti")
       .groupBy("source").agg(count(lit(1)).as("n_kept"))
-      .transform(Present.fused("source"))
+      .orderBy("source")
   }
 
   /** Connected-component labels for one pair family of `dir`, memoized

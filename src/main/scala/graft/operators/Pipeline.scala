@@ -100,7 +100,7 @@ object Pipeline {
         coalesce(col("n_dup"), lit(0L)).as("n_dup"),
         coalesce(col("n_kept"), lit(0L)).as("n_kept"),
         coalesce(col("kept_tokens"), lit(0L)).as("kept_tokens"))
-      .transform(Present.fused("source"))
+      .orderBy("source")
   }
 
   /** Deterministic stratified sampling: keep a document iff the hex md5
@@ -239,7 +239,7 @@ object Pipeline {
         sum(col("n_chars")).as("n_chars"),
         min("doc_id").as("min_doc"),
         max("doc_id").as("max_doc"))
-      .transform(Present.fused("split"))
+      .orderBy("split")
   }
 
   /** Per-source quota sampling (domain capping, the curation step that
@@ -295,7 +295,7 @@ object Pipeline {
       .join(kept, Seq("source"), "left")
       .select(col("source"), col("n_docs"), col("keep_frac"),
         coalesce(col("n_kept"), lit(0L)).as("n_kept"))
-      .transform(Present.fused("source"))
+      .orderBy("source")
   }
 
   /** The mix recipe's per-source keep fractions over an O(#sources)
@@ -360,7 +360,7 @@ object Pipeline {
       .join(kept, Seq("source"), "left")
       .select(col("source"), col("n_docs"), col("weight"), col("keep_frac"),
         coalesce(col("n_kept"), lit(0L)).as("n_kept"))
-      .transform(Present.fused("source"))
+      .orderBy("source")
   }
 
   /** Gopher-style repetition metrics: duplicate-trigram fraction and
@@ -429,7 +429,7 @@ object Pipeline {
       .filter(col("src_a") < col("src_b"))
       .groupBy("src_a", "src_b")
       .agg(count(lit(1)).as("n_shared"))
-      .transform(Present.fused("src_a", "src_b"))
+      .orderBy("src_a", "src_b")
   }
 
   /** Benchmark-contamination check: fraction of each document's 3-grams
@@ -655,7 +655,7 @@ object Pipeline {
         coalesce(col("n_final"), lit(0L)).as("n_final"),
         col("raw_tokens"),
         coalesce(col("final_tokens"), lit(0L)).as("final_tokens"))
-      .transform(Present.fused("source"))
+      .orderBy("source")
   }
 
   /** The composite's epoch permutation (`pipe_e2e_shuffle`): the
@@ -1441,7 +1441,7 @@ object Pipeline {
       .groupBy("phase")
       .agg(count(lit(1)).as("n_docs"), sum(col("n_tokens")).as("n_tokens"),
         min(col("sq")).as("min_sq"), max(col("sq")).as("max_sq"))
-      .transform(Present.fused("phase"))
+      .orderBy("phase")
   }
 
   /** Quality-WEIGHTED Bernoulli sampling (importance sampling at the
@@ -1469,7 +1469,7 @@ object Pipeline {
         sum(when(col("kept"), 1L).otherwise(0L)).as("n_kept"),
         sum(when(col("kept"), col("q_milli")).otherwise(0L)).as("kept_q_milli"),
         sum(col("q_milli")).as("total_q_milli"))
-      .transform(Present.fused("source"))
+      .orderBy("source")
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

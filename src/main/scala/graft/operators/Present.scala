@@ -1,46 +1,20 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
+import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.{CoalesceExec, LocalTableScanExec, SortExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{BroadcastQueryStageExec, ShuffleQueryStageExec, TableCacheQueryStageExec}
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ENSURE_REQUIREMENTS, ShuffleExchangeExec, ShuffleExchangeLike, ValidateRequirements}
+import org.apache.spark.sql.internal.SQLConf
 
-/** Presentation-sort helper for BOUNDED result relations (r21
-  * optimization).
-  *
-  * Every declared query ends in a total deterministic sort so results
-  * replay identically cross-engine (SURVEY §5). Spelled as `.orderBy`,
-  * that sort is a range-partitioned global sort: an extra exchange, a
-  * range-boundary SAMPLING pass over the child, and (under AQE's
-  * stage-by-stage execution) two extra job round-trips — all to order a
-  * relation that is O(groups)-bounded by construction (nation pairs,
-  * event types, histogram buckets, band counts, model folds...), i.e.
-  * small at ANY corpus scale. For those, [[sorted]] plans the same
-  * total order as a single-partition sort: `repartition(1)` (one
-  * all-to-one exchange of the bounded result — no range sampling) +
-  * `sortWithinPartitions`. Rows and row ORDER are bit-identical to the
-  * `.orderBy` spelling (the sort keys are total), so oracles are
-  * untouched; the plan drops the sampling pass and one AQE stage
-  * round-trip (measured ~0.05-0.2 s fixed cost per query locally; at
-  * cluster scale it removes the range-sampling scan of the final
-  * aggregate).
-  *
-  * `repartition(1)`, NOT `coalesce(1)`: coalesce is narrow and fuses
-  * into the stage BELOW, serializing whatever real work (windows,
-  * joins) shares that stage — measured +0.1-0.2 s on ev_rfm /
-  * ev_funnel_time. The explicit 1-partition exchange keeps the
-  * upstream stage's parallelism and moves only the bounded result.
-  *
-  * NOT for corpus-scale outputs (per-document / per-vector / per-order
-  * relations): a single-partition sort of those would serialize the
-  * result write. Those keep `.orderBy`.
-  */
+/** Presentation sorts. Every declared query ends in a total
+  * deterministic sort so results replay identically cross-engine
+  * (SURVEY §5). Queries spell it as plain `.orderBy`; its physical shape
+  * is decided once, by [[SortShape]]. Row order is the same under every
+  * shape, because the keys are total. */
 object Present {
-
-  /** `transform`-style spelling: `df.transform(Present.sorted("a", "b"))`. */
-  def sorted(first: String, rest: String*)(df: DataFrame): DataFrame =
-    df.repartition(1).sortWithinPartitions(first, rest: _*)
-
-  /** `transform`-style spelling with Column sort keys. */
-  def sortedBy(cols: Column*)(df: DataFrame): DataFrame =
-    df.repartition(1).sortWithinPartitions(cols: _*)
 
   /** Corpus-scale per-row MAP pipelines whose declared output order is a
     * total key of their INPUT (per-document serving scans ending in
@@ -53,7 +27,8 @@ object Present {
     * single-row-group parquet files are ONE input split each) both
     * executions are serial. Sorting the input instead samples only the
     * scan, and the map runs once, spread across the range partitions
-    * (guide §1.2 step 1 / §2.5 input skew).
+    * (guide §1.2 step 1 / §2.5 input skew). No plan rule can move the
+    * sort below the map, so this one stays explicit.
     *
     * Row order is bit-identical to `.orderBy(keys)`: the keys are a
     * total order by construction (SURVEY §5), and range partitioning +
@@ -81,31 +56,53 @@ object Present {
       .sortWithinPartitions(keys: _*)
   }
 
-  /** Bounded-output presentation sort with ZERO added exchange (r22):
-    * `coalesce(1)` + `sortWithinPartitions`.
+  /** AQE query-stage preparation rule (registered by
+    * [[graft.GraftExtensions]]; it runs on the initial plan and on every
+    * re-plan). A global sort over its `ENSURE_REQUIREMENTS` range
+    * exchange becomes `coalesce(1)` + sort, with no exchange, once every
+    * input of the stage under that exchange is measured — a materialized
+    * shuffle stage, a materialized cached-table stage or a local
+    * relation; broadcast sides are not counted — and their total is no
+    * more than AQE itself reads as one partition:
+    * `coalescePartitions.minPartitionSize` under the default
+    * `parallelismFirst`, else `advisoryPartitionSizeInBytes`. Such an
+    * input would be coalesced to one task anyway, so the range exchange
+    * only adds its sampling pass, a shuffle and an AQE stage round-trip.
     *
-    * [[sorted]]'s `repartition(1)` moves the bounded result through one
-    * more shuffle (an extra AQE stage round-trip) so that the stage
-    * BELOW keeps its parallelism — the right trade when that stage
-    * holds real per-row work (windows, joins over user-scale rows:
-    * measured +0.1-0.2 s with coalesce on ev_rfm / ev_funnel_time).
-    * The fixed-geometry ARRAY faces are the opposite shape: everything
-    * between the last data-scale exchange (the per-chunk aggregate,
-    * whose map side stays parallel) and the declared sort is
-    * O(timesteps x grid)-bounded at ANY corpus scale, so fusing it into
-    * one task costs bounded work and saves an entire exchange + its
-    * AQE round-trip (and, vs `.orderBy`, the range-sampling pass too).
-    * Measured on the 98-query arr family (event-log attribution): the
-    * pass-2 sweep spends more time in Catalyst/AQE re-planning between
-    * jobs (15.8 s) than inside them (12.9 s) — dropping one exchange
-    * per query attacks both halves.
-    *
-    * Row order is bit-identical to `.orderBy(keys)` (total keys, same
-    * global sort). */
-  def fused(first: String, rest: String*)(df: DataFrame): DataFrame =
-    fusedBy((first +: rest).map(org.apache.spark.sql.functions.col): _*)(df)
+    * Every other sort keeps Spark's range sort: file-scan stages, and
+    * inputs that are larger or not measured yet (a later re-plan sees
+    * them again once they are). A rewrite that breaks a parent's
+    * distribution requirement is dropped whole. */
+  object SortShape extends Rule[SparkPlan] {
+    def apply(plan: SparkPlan): SparkPlan = {
+      val line: Long =
+        if (conf.getConf(SQLConf.COALESCE_PARTITIONS_PARALLELISM_FIRST))
+          conf.getConf(SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE)
+        else conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
+      val fused = plan.transformUp {
+        case s @ SortExec(_, true,
+            ShuffleExchangeExec(_: RangePartitioning, child, ENSURE_REQUIREMENTS, _), _)
+            if inputBytes(child).exists(_ <= line) =>
+          s.withNewChildren(Seq(CoalesceExec(1, child)))
+      }
+      if ((fused ne plan) && ValidateRequirements.validate(fused)) fused else plan
+    }
 
-  /** [[fused]] with Column sort keys (the [[sortedBy]] twin). */
-  def fusedBy(cols: Column*)(df: DataFrame): DataFrame =
-    df.coalesce(1).sortWithinPartitions(cols: _*)
+    /** Total measured bytes of the stage inputs under `p`, or None while
+      * any of them is unmeasured. */
+    private def inputBytes(p: SparkPlan): Option[BigInt] = p match {
+      case _: BroadcastQueryStageExec | _: BroadcastExchangeLike => Some(0)
+      case s: ShuffleQueryStageExec if s.isMaterialized =>
+        Some(s.mapStats.map(m => BigInt(m.bytesByPartitionId.sum)).getOrElse(0))
+      case c: TableCacheQueryStageExec if c.isMaterialized =>
+        Some(c.getRuntimeStatistics.sizeInBytes)
+      case l: LocalTableScanExec =>
+        Some(EstimationUtils.getSizePerRow(l.output) * l.rows.size)
+      case _: ShuffleExchangeLike => None
+      case _ if p.children.isEmpty => None
+      case _ => p.children.foldLeft(Option(BigInt(0))) { (acc, c) =>
+        for (a <- acc; b <- inputBytes(c)) yield a + b
+      }
+    }
+  }
 }

@@ -87,7 +87,7 @@ object Relational {
         sumUnits(col("pc") * (lit(100L) - col("dc")) * (lit(100L) + col("tc")), 6)
           .as("sum_charge"),
         count(lit(1)).as("count_order"))
-      .transform(Present.fused("l_returnflag", "l_linestatus"))
+      .orderBy("l_returnflag", "l_linestatus")
 
   /** TPC-H Q3 shape: 3-way join (1 broadcast) + agg + top-N. */
   def q3ShippingPriority(s: SparkSession, dir: String): DataFrame = {
@@ -138,7 +138,7 @@ object Relational {
         col("l_orderkey") === col("o_orderkey") && col("cn_key") === col("s_nationkey"))
       .groupBy("n_name")
       .agg(sumDiscPrice.as("revenue"))
-      .transform(Present.fusedBy(desc("revenue"), asc("n_name")))
+      .orderBy(desc("revenue"), asc("n_name"))
   }
 
   /** TPC-H Q7 shape: two-nation trade volume by ship year. The nation
@@ -177,7 +177,7 @@ object Relational {
       .groupBy(col("supp_nation"), col("cust_nation"),
         year(col("l_shipdate")).cast("bigint").as("l_year"))
       .agg(sumDiscPrice.as("revenue"))
-      .transform(Present.fused("supp_nation", "cust_nation", "l_year"))
+      .orderBy("supp_nation", "cust_nation", "l_year")
   }
 
   /** TPC-H Q10 shape: returned-item revenue ranking per customer —
@@ -236,7 +236,7 @@ object Relational {
       .filter(col("last_ship") > col("o_orderdate") + expr("INTERVAL 60 DAYS"))
       .groupBy("o_orderpriority")
       .agg(count(lit(1)).as("order_count"))
-      .transform(Present.fused("o_orderpriority"))
+      .orderBy("o_orderpriority")
   }
 
   /** TPC-H Q13 shape: customer-order distribution. Left outer join with
@@ -253,7 +253,7 @@ object Relational {
       .agg(count(col("o_orderkey")).as("c_count"))
       .groupBy("c_count")
       .agg(count(lit(1)).as("custdist"))
-      .transform(Present.fusedBy(desc("custdist"), desc("c_count")))
+      .orderBy(desc("custdist"), desc("c_count"))
   }
 
   /** TPC-H Q22 shape: scalar aggregate subquery (global positive-balance
@@ -272,7 +272,7 @@ object Relational {
       .groupBy("c_nationkey")
       .agg(count(lit(1)).as("numcust"),
         sum(dec2("c_acctbal")).cast("double").as("totacctbal"))
-      .transform(Present.fused("c_nationkey"))
+      .orderBy("c_nationkey")
   }
 
   /** TPC-H Q21 shape (suppliers who kept orders waiting, adapted to this
@@ -409,7 +409,7 @@ object Relational {
           .otherwise(lit(0L)), 4).as("nation_volume"),
         sumDiscPrice.as("total_volume"))
       .withColumn("mkt_share", col("nation_volume") / col("total_volume"))
-      .transform(Present.fused("o_year"))
+      .orderBy("o_year")
   }
 
   /** TPC-H Q15 shape: top supplier by quarter revenue. The revenue
@@ -434,7 +434,7 @@ object Relational {
       .select(col("s_suppkey"), col("s_name"),
         (col("rev_u") * lit(new java.math.BigDecimal(java.math.BigInteger.ONE, 4)))
           .cast("double").as("total_revenue"))
-      .transform(Present.sorted("s_suppkey"))
+      .orderBy("s_suppkey")
   }
 
   /** Predicate pushdown + column pruning: both must reach the parquet scan. */
@@ -460,7 +460,7 @@ object Relational {
         countDistinct(col("l_partkey")).as("n_parts"),
         countDistinct(col("l_suppkey")).as("n_supps"),
         count(lit(1)).as("n_rows"))
-      .transform(Present.fused("l_returnflag"))
+      .orderBy("l_returnflag")
 
   /** Window function: top-3 customers by acctbal per nation. */
   def qWindowRank(s: SparkSession, dir: String): DataFrame = {
@@ -471,7 +471,7 @@ object Relational {
         col("c_acctbal").cast("decimal(18,2)").cast("double").as("c_acctbal"))
       .withColumn("rk", row_number().over(w).cast("bigint"))
       .filter(col("rk") <= 3)
-      .transform(Present.sorted("c_nationkey", "rk"))
+      .orderBy("c_nationkey", "rk")
   }
 
   /** Left-semi + left-anti joins, labeled and unioned. */
@@ -486,7 +486,7 @@ object Relational {
       .withColumn("has_orders", lit("no"))
     semi.unionByName(anti)
       .select("c_nationkey", "has_orders", "n_customers")
-      .transform(Present.fused("c_nationkey", "has_orders"))
+      .orderBy("c_nationkey", "has_orders")
   }
 
   /** Multi-level rollup aggregate — two-phase like [[qCube]]: base
@@ -497,7 +497,7 @@ object Relational {
       .rollup("l_returnflag", "l_linestatus")
       .agg(sum(col("qty_d")).cast("double").as("sum_qty"),
         sum(col("base_rows")).as("n_rows"))
-      .transform(Present.fusedBy(asc_nulls_first("l_returnflag"), asc_nulls_first("l_linestatus")))
+      .orderBy(asc_nulls_first("l_returnflag"), asc_nulls_first("l_linestatus"))
 
   /** Conditional (pivot-style) aggregation. */
   def qCaseAgg(s: SparkSession, dir: String): DataFrame =
@@ -509,7 +509,7 @@ object Relational {
         sum(when(col("o_orderstatus") === "O", 1).otherwise(0)).as("n_open"),
         sum(when(col("o_totalprice") > 200000, dec2("o_totalprice")).otherwise(lit(0).cast("decimal(18,2)")))
           .cast("double").as("big_total"))
-      .transform(Present.fused("o_orderpriority"))
+      .orderBy("o_orderpriority")
 
   /** Min-per-group + join-back (TPC-H Q2 shape): cheapest part(s) per
     * brand. The aggregate side is broadcast back against the fact. */
@@ -522,7 +522,7 @@ object Relational {
           dec2("p_retailprice") === col("min_price"))
       .select(col("p_brand"), col("p_partkey"),
         col("min_price").cast("double").as("min_price"))
-      .transform(Present.sorted("p_brand", "p_partkey"))
+      .orderBy("p_brand", "p_partkey")
   }
 
   /** Outer-join histogram (TPC-H Q13 shape): distribution of per-customer
@@ -535,7 +535,7 @@ object Relational {
       .agg(count(col("o_orderkey")).as("c_count"))
       .groupBy("c_count")
       .agg(count(lit(1)).as("custdist"))
-      .transform(Present.fusedBy(desc("custdist"), desc("c_count")))
+      .orderBy(desc("custdist"), desc("c_count"))
   }
 
   /** Conditional-aggregate ratio (TPC-H Q14 shape): PROMO revenue share. */
@@ -563,7 +563,7 @@ object Relational {
       .join(hot.hint("shuffle_hash"), col("p_partkey") === col("l_partkey"), "left_anti")
       .groupBy("p_brand")
       .agg(count(lit(1)).as("n_parts"))
-      .transform(Present.fused("p_brand"))
+      .orderBy("p_brand")
   }
 
   /** Large-volume orders (TPC-H Q18 shape): HAVING over a grouped join. */
@@ -623,7 +623,7 @@ object Relational {
       .filter(col("last_ship") > col("o_orderdate") + expr("INTERVAL 90 DAYS"))
       .groupBy("o_orderpriority")
       .agg(count(lit(1)).as("n_orders"))
-      .transform(Present.fused("o_orderpriority"))
+      .orderBy("o_orderpriority")
   }
 
   /** String expression pipeline: substring buckets, LIKE filters, case
@@ -637,7 +637,7 @@ object Relational {
       .agg(count(lit(1)).as("n_parts"),
         sum(col("has_a")).as("n_with_a"),
         sum(col("consonant_len")).as("total_consonants"))
-      .transform(Present.fused("prefix"))
+      .orderBy("prefix")
 
   /** Sketch size for [[qApproxSketch]] (KMV distinct + bottom-k
     * quantile sample): rank/count error ~1/√k ≈ 3%. */
@@ -755,7 +755,7 @@ object Relational {
         element_at(col("vs"),
           (floor(((size(col("vs")) - 1) * 50) / lit(100.0)) + 1).cast("int"))
           .as("approx_median_qty"))
-      .transform(Present.fused("l_returnflag"))
+      .orderBy("l_returnflag")
   }
 
   /** Sketch size for [[evValueSketch]]. */
@@ -781,7 +781,7 @@ object Relational {
       .select(col("event_type"), col("n_rows"),
         size(col("vs")).cast("bigint").as("m"),
         pick(50).as("est_p50"), pick(90).as("est_p90"), pick(99).as("est_p99"))
-      .transform(Present.fused("event_type"))
+      .orderBy("event_type")
   }
 
   /** Exact median via the lower-middle-row definition (deterministic and
@@ -814,7 +814,7 @@ object Relational {
       .withColumn("k", ceil(col("n") / lit(2.0)).cast("bigint"))
       .filter(col("cum") >= col("k") && col("cum") - col("cnt") < col("k"))
       .select(col("l_returnflag"), col("l_quantity").as("median_qty"), col("n").as("n_rows"))
-      .transform(Present.sorted("l_returnflag"))
+      .orderBy("l_returnflag")
   }
 
   /** Per-nation customer revenue deciles — the segmentation pass behind
@@ -842,7 +842,7 @@ object Relational {
       .groupBy("c_nationkey", "decile")
       .agg(count(lit(1)).as("n_customers"),
         sum(col("rev")).cast("double").as("revenue"))
-      .transform(Present.sorted("c_nationkey", "decile"))
+      .orderBy("c_nationkey", "decile")
   }
 
   /** Daily active users + per-user event density — the engagement
@@ -885,7 +885,7 @@ object Relational {
       .groupBy("wday")
       .agg(count(lit(1)).as("wau"))
       .select(col("wday").as("day"), col("wau"))
-      .transform(Present.sorted("day"))
+      .orderBy("day")
   }
 
   /** Time-to-convert through the funnel (view → click → purchase, the
@@ -918,7 +918,7 @@ object Relational {
     h.groupBy("stage")
       .agg(max(col("n")).as("n_users"),
         pick(0.50).as("med_delay_us"), pick(0.90).as("p90_delay_us"))
-      .transform(Present.sorted("stage"))
+      .orderBy("stage")
   }
 
   /** Stickiness (DAU / trailing-7-day AU per day) — the engagement
@@ -941,7 +941,7 @@ object Relational {
     dau.join(wau.hint("shuffle_hash"), "day")
       .select(col("day"), col("dau"), col("wau"),
         (col("dau").cast("double") / col("wau").cast("double")).as("stickiness"))
-      .transform(Present.sorted("day"))
+      .orderBy("day")
   }
 
   def evActiveUsers(s: SparkSession, dir: String): DataFrame = {
@@ -953,7 +953,7 @@ object Relational {
       .select(col("day"), col("dau"), col("n_events"),
         (col("n_events").cast("double") / col("dau").cast("double"))
           .as("events_per_user"))
-      .transform(Present.fused("day"))
+      .orderBy("day")
   }
 
   /** Exact multi-quantile profile (p25/p50/p75 of quantity per return
@@ -971,7 +971,7 @@ object Relational {
         col("l_quantity")))
     quantityHistogram(s, dir).groupBy("l_returnflag")
       .agg(pick(0.25).as("p25"), pick(0.50).as("p50"), pick(0.75).as("p75"))
-      .transform(Present.sorted("l_returnflag"))
+      .orderBy("l_returnflag")
   }
 
   /** Exact per-event-type latency-style quantiles (p50/p95/p99 of
@@ -999,7 +999,7 @@ object Relational {
       min(when(col("cum") >= ceil(col("n") * lit(q)).cast("bigint"), col("value")))
     h.groupBy("event_type")
       .agg(pick(0.50).as("p50"), pick(0.95).as("p95"), pick(0.99).as("p99"))
-      .transform(Present.sorted("event_type"))
+      .orderBy("event_type")
   }
 
   /** Interpolated per-event-type latency quantiles — [[evQuantiles]]'s
@@ -1038,7 +1038,7 @@ object Relational {
           .otherwise(col(s"_lo$i") * (lit(1.0) - d) + col(s"_hi$i") * d)
           .as(nm)
       }: _*)
-      .transform(Present.sorted("event_type"))
+      .orderBy("event_type")
   }
 
   /** Frequent event types through the native Misra-Gries sketch
@@ -1057,7 +1057,7 @@ object Relational {
         .heavyHitters(col("event_type"), 8).as("hh"))
       .select(explode(col("hh")).as("e"))
       .select(col("e.item").as("event_type"), col("e.lower_bound").as("n_events"))
-      .transform(Present.fusedBy(col("n_events").desc, col("event_type")))
+      .orderBy(col("n_events").desc, col("event_type"))
 
   /** Frame window: 7-row moving average of daily order revenue
     * (ROWS BETWEEN 6 PRECEDING AND CURRENT ROW).
@@ -1113,7 +1113,7 @@ object Relational {
       .cube("l_returnflag", "l_linestatus")
       .agg(sum(col("qty_d")).cast("double").as("sum_qty"),
         sum(col("base_rows")).as("n_rows"))
-      .transform(Present.fusedBy(asc_nulls_first("l_returnflag"), asc_nulls_first("l_linestatus")))
+      .orderBy(asc_nulls_first("l_returnflag"), asc_nulls_first("l_linestatus"))
 
   /** GROUPING SETS with NON-hierarchical margins — ((flag), (status)):
     * the member of the cube/rollup family neither of those can express
@@ -1127,7 +1127,7 @@ object Relational {
         col("l_returnflag"), col("l_linestatus"))
       .agg(sum(col("qty_d")).cast("double").as("sum_qty"),
         sum(col("base_rows")).as("n_rows"))
-      .transform(Present.fusedBy(asc_nulls_first("l_returnflag"), asc_nulls_first("l_linestatus")))
+      .orderBy(asc_nulls_first("l_returnflag"), asc_nulls_first("l_linestatus"))
 
   /** Set operations: INTERSECT / EXCEPT between big-order buyers and the
     * BUILDING segment. */
@@ -1142,7 +1142,7 @@ object Relational {
       .agg(count(lit(1)).as("n")).withColumn("op", lit("intersect"))
     val e = bigBuyers.except(building)
       .agg(count(lit(1)).as("n")).withColumn("op", lit("except"))
-    i.unionByName(e).select("op", "n").transform(Present.fused("op"))
+    i.unionByName(e).select("op", "n").orderBy("op")
   }
 
   /** Pivot (explicit value list keeps the plan one-pass). */
@@ -1155,7 +1155,7 @@ object Relational {
         coalesce(col("F"), lit(0L)).as("n_f"),
         coalesce(col("O"), lit(0L)).as("n_o"),
         coalesce(col("P"), lit(0L)).as("n_p"))
-      .transform(Present.fused("o_orderpriority"))
+      .orderBy("o_orderpriority")
 
   // ---- §2.C events / time-series ----
 
@@ -1165,7 +1165,7 @@ object Relational {
       .groupBy(date_trunc("hour", col("ts")).as("hour"), col("event_type"))
       .agg(count(lit(1)).as("n_events"),
         sum(dec2("value")).cast("double").as("total_value"))
-      .transform(Present.fused("hour", "event_type"))
+      .orderBy("hour", "event_type")
 
   /** Gap-based sessionization (30 min) via lag + running sum of boundaries. */
   def evSessionize(s: SparkSession, dir: String): DataFrame = {
@@ -1192,7 +1192,7 @@ object Relational {
       .orderBy(desc("total_value"), asc("user_id"))
     totals.withColumn("rk", row_number().over(w).cast("bigint"))
       .filter(col("rk") <= 3)
-      .transform(Present.sorted("event_type", "rk"))
+      .orderBy("event_type", "rk")
   }
 
   /** As-of join: for every `error` event, the most recent `purchase` of
@@ -1298,7 +1298,7 @@ object Relational {
       .agg(sum(dec2("value")).cast("double").as("total_value"))
     org.apache.spark.sql.graftexpr.TopKPerKey
       .perKey(totals, Seq("event_type"), Seq(("total_value", false), ("user_id", true)), 3)
-      .transform(Present.sortedBy(asc("event_type"), desc("total_value"), asc("user_id")))
+      .orderBy(asc("event_type"), desc("total_value"), asc("user_id"))
   }
 
   /** Per-user activity anomalies: hours where a user's event count sits
@@ -1374,7 +1374,7 @@ object Relational {
         when(col("den") > 0.0,
           (n * col("sxy") - sx * sy) / col("den"))
           .as("corr_qty_disc"))
-      .transform(Present.fused("l_returnflag"))
+      .orderBy("l_returnflag")
   }
 
   /** Per-user event-type transition matrix (first-order Markov counts)
@@ -1390,7 +1390,7 @@ object Relational {
       .filter(col("next_type").isNotNull)
       .groupBy(col("event_type").as("from_type"), col("next_type").as("to_type"))
       .agg(count(lit(1)).as("n_transitions"))
-      .transform(Present.fused("from_type", "to_type"))
+      .orderBy("from_type", "to_type")
   }
 
   /** Conversion funnel (view -> later click -> later purchase), the
@@ -1457,7 +1457,7 @@ object Relational {
       .groupBy(col("day"))
       .agg(count(lit(1)).as("n_active"),
         count(col("cohort_day")).as("n_retained7"))
-      .transform(Present.fused("day"))
+      .orderBy("day")
   }
 
   /** JSON property extraction + aggregation. */
@@ -1466,7 +1466,7 @@ object Relational {
       .withColumn("k", get_json_object(col("props"), "$.k").cast("int"))
       .groupBy((col("k") % 10).as("k_bucket"))
       .agg(count(lit(1)).as("n_events"), max(col("k")).as("max_k"))
-      .transform(Present.fused("k_bucket"))
+      .orderBy("k_bucket")
 
   /** Per-user session DURATION profile — [[evSessionize]]'s counts with
     * the metric product analytics actually reads off sessions (how long
@@ -1532,7 +1532,7 @@ object Relational {
       .agg(max(col("n")).as("n_gaps"),
         pick(0.50).as("med_gap_us"), pick(0.90).as("p90_gap_us"),
         max(col("gap_us")).as("max_gap_us"))
-      .transform(Present.sorted("event_type"))
+      .orderBy("event_type")
   }
 
   /** The remaining SQL window-function surface in one face —
@@ -1559,7 +1559,7 @@ object Relational {
       .select(col("c_nationkey"), col("c_custkey"), col("rk"),
         col("bal").cast("double").as("bal"),
         col("pct_rank"), col("cume"), col("top_bal"), col("second_bal"))
-      .transform(Present.sorted("c_nationkey", "rk"))
+      .orderBy("c_nationkey", "rk")
   }
 
   /** User-set overlap between event types (the audience-overlap matrix
@@ -1593,7 +1593,7 @@ object Relational {
         (col("n_common").cast("double") /
           (col("n_a") + col("n_b") - col("n_common")).cast("double"))
           .as("jaccard"))
-      .transform(Present.sorted("type_a", "type_b"))
+      .orderBy("type_a", "type_b")
   }
 
   /** Gini coefficient of per-user activity (the concentration statistic
@@ -1719,7 +1719,7 @@ object Relational {
         max(col("rec")).as("max_recency"),
         sum(col("freq")).as("total_events"),
         sum(col("cents")).as("total_cents"))
-      .transform(Present.fused("segment"))
+      .orderBy("segment")
   }
 
   /** Log₂ value histogram per event type (the money-scale distribution
@@ -1739,7 +1739,7 @@ object Relational {
       .agg(count(lit(1)).as("n_events"),
         min(col("cents")).as("min_cents"), max(col("cents")).as("max_cents"),
         sum(col("cents")).as("total_cents"))
-      .transform(Present.fused("event_type", "bucket"))
+      .orderBy("event_type", "bucket")
 
   /** FULL OUTER join surface — order activity vs shipping activity by
     * day (the reconciliation query that finds days with orders but no
@@ -1788,7 +1788,7 @@ object Relational {
     daily
       .select(col("day"), col("x").cast("double").as("daily_total"),
         (num / den).as("ewma7"))
-      .transform(Present.fused("day"))
+      .orderBy("day")
   }
 
   /** CUSUM change-point scan over the daily value total (Page 1954 —
@@ -1815,7 +1815,7 @@ object Relational {
           .as("cusum_scaled"),
         ((col("n") * col("p") - col("d") * col("stot")).cast("double")
           / col("n").cast("double")).as("cusum"))
-      .transform(Present.fused("day"))
+      .orderBy("day")
   }
 
   /** User lifetime histogram (retention's long-tail summary): per user
@@ -1833,7 +1833,7 @@ object Relational {
     perUser.groupBy("lifetime_days")
       .agg(count(lit(1)).as("n_users"),
         sum(col("active_days")).as("total_active_days"))
-      .transform(Present.fused("lifetime_days"))
+      .orderBy("lifetime_days")
   }
 
   /** Weekly cohort retention MATRIX — [[evRetention]]'s single-offset
@@ -1857,6 +1857,6 @@ object Relational {
     weeks.join(cohorts.hint("shuffle_hash"), "user_id")
       .groupBy(col("cohort_week"), (col("week") - col("cohort_week")).as("week_offset"))
       .agg(count(lit(1)).as("n_users"))
-      .transform(Present.fused("cohort_week", "week_offset"))
+      .orderBy("cohort_week", "week_offset")
   }
 }

@@ -44,10 +44,10 @@ object Similarity {
       .perKey(scored, Seq("probe_id"), Seq(("cos", false), ("vec_id", true)), k)
       .withColumn("rk", row_number().over(w).cast("bigint"))
       // bounded output (<= k rows per probe, fixed probe workload at any
-      // corpus scale): fused single-task presentation sort (r22) — with
-      // TopKPerKeyExec now propagating its child partitioning, the whole
-      // rank+sort tail runs above ONE exchange
-      .transform(Present.fused("probe_id", "rk"))
+      // corpus scale): TopKPerKeyExec propagates its child partitioning,
+      // so the rank runs above ONE exchange, and Present.SortShape plans
+      // the sort as one task once that exchange's output is measured
+      .orderBy("probe_id", "rk")
   }
 
   /** k-NN SELF-join: every vector's [[KnnK]] nearest same-label
@@ -148,7 +148,7 @@ object Similarity {
       .agg(count(lit(1)).as("n_cand"),
         sum(when(col("cos") >= RangeTau, 1L).otherwise(0L)).as("n_in_range"),
         max(col("cos")).as("max_cos"))
-      .transform(Present.fused("probe_id"))
+      .orderBy("probe_id")
   }
 
   /** Range-search RECALL: the LSH bucket's in-range count against the
@@ -180,7 +180,7 @@ object Similarity {
         when(col("n_true") > 0,
           coalesce(col("n_found"), lit(0L)).cast("double") /
             col("n_true").cast("double")).as("recall"))
-      .transform(Present.fused("probe_id"))
+      .orderBy("probe_id")
   }
 
   /** Sign-bit (binary) embedding profile — the 1-bit quantization ANN
@@ -206,7 +206,7 @@ object Similarity {
       .agg(count(lit(1)).as("n_vecs"),
         min(col("h")).cast("bigint").as("min_h"),
         max(col("h")).cast("bigint").as("max_h"))
-      .transform(Present.fused("probe_id", "h_bucket"))
+      .orderBy("probe_id", "h_bucket")
   }
 
   /** Symmetric int8 quantization per vector (the embedding-compression
@@ -281,7 +281,7 @@ object Similarity {
       .agg(count(col("a_vid")).as("n_hits"))
       .select(col("probe_id"), col("n_hits"),
         (col("n_hits").cast("double") / lit(5.0)).as("recall"))
-      .transform(Present.fused("probe_id"))
+      .orderBy("probe_id")
   }
 
   /** Class-separability profile of the embedding space — mean pairwise
@@ -342,7 +342,7 @@ object Similarity {
           col("cdot") /
             (col("n_vecs").cast("double") * (col("n_g") - col("n_vecs")).cast("double")) /
             lit(1e12)).as("cross_dot_mean"))
-      .transform(Present.fused("label"))
+      .orderBy("label")
   }
 
   /** Quantization scale for the embedding Gram: q = floor(1e3·x)
@@ -400,7 +400,7 @@ object Similarity {
       .select(posexplode(slice(col("gb"), 1, Dim * Dim)).as(Seq("idx", "g")))
       .select(floor(col("idx") / lit(Dim)).cast("bigint").as("i"),
         (col("idx") % lit(Dim)).cast("bigint").as("j"), col("g"))
-      .transform(Present.fused("i", "j"))
+      .orderBy("i", "j")
 
   /** PCA spectrum of the embedding corpus (eigenvalues of the CENTERED
     * quantized second-moment matrix, top 16) — the intrinsic-
@@ -421,7 +421,7 @@ object Similarity {
       graft.arrays.Eigen.symEigenvalues(embCenteredCov(s, dir)).take(16))
     import s.implicits._
     eig.zipWithIndex.map { case (v, k) => (k.toLong, v) }
-      .toDF("k", "lam").transform(Present.fused("k"))
+      .toDF("k", "lam").orderBy("k")
   }
 
   /** How many principal components [[embPcaProject]] keeps. */
@@ -474,7 +474,7 @@ object Similarity {
       .select(floor(col("idx") / lit(Dim)).cast("bigint").as("i"),
         (col("idx") % lit(Dim)).cast("bigint").as("j"),
         col("g").cast("string").as("g"))
-      .transform(Present.fused("i", "j"))
+      .orderBy("i", "j")
   }
 
   /** How many whitened coordinates [[embWhiten]] emits. */
@@ -1096,7 +1096,7 @@ object Similarity {
         (sum(floor(col("v").cast("double") * lit(1e6)).cast("bigint"))
           .cast("double") /
           count(lit(1)).cast("double") / lit(1e6)).as("centroid"))
-      .transform(Present.fused("label", "d"))
+      .orderBy("label", "d")
 
   /** Nearest-class-mean assignment (label-noise detection): every
     * vector is assigned to its closest [[embLabelCentroids]] prototype
@@ -1127,7 +1127,7 @@ object Similarity {
       .withColumn("assigned", array_min(array(distStructs: _*)).getField("lbl"))
       .groupBy("label", "assigned")
       .agg(count(lit(1)).as("n_vecs"))
-      .transform(Present.fused("label", "assigned"))
+      .orderBy("label", "assigned")
   }
 
   /** The trained coarse quantizer: k-means fits once per corpus and the

@@ -315,7 +315,7 @@ object TextAnalysis {
       .groupBy("bucket")
       .agg(count(lit(1)).as("n_tokens"),
         count_distinct(col("doc_id")).as("n_docs"))
-      .transform(Present.fused("bucket"))
+      .orderBy("bucket")
   }
 
   /** Model-based quality scoring — the trained-classifier gate every

@@ -1,9 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Optimization-round profiling harness: runs a SPARK_GRAFT_ONLY subset
-  * of queries under the bench session config with event logging on, so
+/** Profiling harness: runs a SPARK_GRAFT_ONLY subset of queries under
+  * the bench session (Bench.measurementSession) with event logging on, so
   * per-stage/task time (scheduling vs compute vs shuffle) can be parsed
   * from /tmp/spark-events. Each query runs twice (bench methodology:
   * the second pass is the marginal cost). */
@@ -13,21 +11,14 @@ object ProfR21 {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       Runtime.getRuntime.availableProcessors.toString)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get("/tmp/spark-events"))
-    val spark = SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.eventLog.enabled", "true")
-      .config("spark.eventLog.dir", "/tmp/spark-events")
+    // Event logging is a SparkContext setting, read from spark.* system
+    // properties when the context starts; everything else is the bench's.
+    sys.props ++= Seq(
+      "spark.eventLog.enabled" -> "true",
+      "spark.eventLog.dir" -> "/tmp/spark-events",
       // the box has no zstd cli/python binding; write plain JSON
-      .config("spark.eventLog.compress", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      "spark.eventLog.compress" -> "false")
+    val spark = Bench.measurementSession(cpus, cpus.toInt)
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").toSeq)
       .getOrElse(SparkEntry.queries.keys.toSeq.sorted)
